@@ -1073,7 +1073,6 @@ object SparkEntry {
        |  FROM G)""".stripMargin
 
   private def payloadStatsSql(src: String = "documents", prefix: String = ""): String = {
-    import graft.lib.Classify._
     s"""WITH $prefix${payloadFeaturesSql(src)}
        |SELECT doc_id,
        | n_lines,

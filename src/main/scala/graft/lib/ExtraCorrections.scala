@@ -1,6 +1,5 @@
 package graft.lib
 
-import java.util.regex.Pattern
 import Py._
 
 /** API-completeness corrections outside the live request path.
@@ -8,10 +7,8 @@ import Py._
   * `clean_text` (reference lib/utils.py:291-338) is a library helper
   * imported but not called in the main path; `_apply_general_text_
   * corrections` (lib/text_processing.py:601-709) is defined but never
-  * called; `_fix_scientific_text` (:323-404) is dead AND raises in the
-  * reference (bad `\u208` escape in a replacement — SURVEY.md §1.3).
-  * All are part of the reference's exported surface, so a user
-  * switching engines can still call them.
+  * called. Both are part of the reference's exported surface, so a user
+  * switching engines can still call them; both are golden-tested.
   */
 object ExtraCorrections {
 
@@ -76,73 +73,6 @@ object ExtraCorrections {
       val fixed = url.replace(" ", "").replace(",", ".").replace(";", ".")
       t = t.replace(url, fixed)
     }
-    t
-  }
-
-  // --- _fix_scientific_text (text_processing.py:323-404) -------------------
-  // DIVERGENCE (documented): the reference's replacements r'\1\u208\2'
-  // raise `re.error: bad escape \u` in Python 3.7+, so the reference
-  // version cannot execute at all. We implement the evident intent
-  // (subscript digits U+2080+d); everything else is literal.
-
-  private val pSup = compile("(\\d)[\\^](\\d+)")
-  private val pSup2 = compile("(\\d)[\\^]2")
-  private val pSup3 = compile("(\\d)[\\^]3")
-  private val pSub = compile("([A-Za-z])_(\\d)")
-  private val pChem = compile("([A-Z][a-z]?)(\\d+)")
-  private val sciFixes: Vector[(Pattern, String, Boolean)] = Vector(
-    ("(?<=\\d)x(?=\\d)", "\u00d7", false), ("alpha", "\u03b1", false),
-    ("beta", "\u03b2", false), ("gamma", "\u03b3", false),
-    ("delta", "\u03b4", false), ("epsilon", "\u03b5", false),
-    ("theta", "\u03b8", false), ("lambda", "\u03bb", false),
-    ("micro", "\u00b5", false), ("pi", "\u03c0", false),
-    ("sigma", "\u03c3", false), ("Sigma", "\u03a3", false),
-    ("tau", "\u03c4", false), ("phi", "\u03c6", false),
-    ("omega", "\u03c9", false), ("Omega", "\u03a9", false),
-    ("approx", "\u2248", false), ("neq", "\u2260", false),
-    ("leq", "\u2264", false), ("geq", "\u2265", false),
-    ("(?<!\\w)inf(?!\\w)", "\u221e", false), ("sqrt", "\u221a", false),
-    ("integral", "\u222b", false), ("nabla", "\u2207", false),
-    ("union", "\u222a", false), ("intersect", "\u2229", false),
-    ("in", "\u2208", false), ("notin", "\u2209", false),
-    ("subset", "\u2282", false), ("superset", "\u2283", false),
-    ("partial", "\u2202", false), ("sum", "\u2211", false),
-    ("product", "\u220f", false), ("deg(ree)?s?", "\u00b0", false),
-    ("\\+/-", "\u00b1", false), ("\\(\\+/-\\)", "\u00b1", false)
-  ).map { case (p, r, g) => (compile(p), r, g) }
-  private val unitFixes: Vector[(Pattern, String)] = Vector(
-    "([0-9]+)([^0-9\\s]+[Cc])" -> "$1 \u00b0C",
-    "([0-9]+)([^0-9\\s]+[Ff])" -> "$1 \u00b0F",
-    "([0-9]+)([^0-9\\s]+[Kk])" -> "$1 K",
-    "([0-9]+)([^0-9\\s]*)[Mm][Ll]" -> "$1 ml",
-    "([0-9]+)([^0-9\\s]*)[Mm][Gg]" -> "$1 mg",
-    "([0-9]+)([^0-9\\s]*)[Kk][Gg]" -> "$1 kg",
-    "([0-9]+)([^0-9\\s]*)[Cc][Mm]" -> "$1 cm",
-    "([0-9]+)([^0-9\\s]*)[Mm][Mm]" -> "$1 mm",
-    "([0-9]+)([^0-9\\s]*)[Kk][Mm]" -> "$1 km"
-  ).map { case (p, r) => (compile(p), r) }
-
-  private def subscriptDigits(p: Pattern, t: String): String = {
-    val m = p.matcher(t)
-    val sb = new java.lang.StringBuilder
-    var last = 0
-    while (m.find()) {
-      sb.append(t, last, m.start).append(m.group(1))
-      m.group(2).foreach(d => sb.append((0x2080 + (d - '0')).toChar))
-      last = m.end
-    }
-    sb.append(t, last, t.length)
-    sb.toString
-  }
-
-  def fixScientificText(text0: String): String = {
-    var t = sub(pSup, "$1\u00b2", text0)
-    t = sub(pSup2, "$1\u00b2", t)
-    t = sub(pSup3, "$1\u00b3", t)
-    t = subscriptDigits(pSub, t)
-    for ((p, r, _) <- sciFixes) t = subLit(p, r, t)
-    t = subscriptDigits(pChem, t)
-    for ((p, r) <- unitFixes) t = sub(p, r, t)
     t
   }
 }

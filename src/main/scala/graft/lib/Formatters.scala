@@ -1,6 +1,5 @@
 package graft.lib
 
-import java.util.regex.Pattern
 import graft.model.DocStructure
 import Py._
 
@@ -16,13 +15,10 @@ object Formatters {
 
   // --- detect_document_structure (text_processing.py:1212-1259) ---------
 
-  private val pBulletLine = compile("(?:^|\\n)[•\\-*+]")
-  private val pNumberedLine = compile("(?:^|\\n)\\d+[\\.\\)]")
   private val pTableRow = compile("(?:^|\\n)[\\w\\s]+\\|[\\w\\s]+\\|")
   private val pFormField = compile("(?:^|\\n)[\\w\\s]+:")
   private val pHeaderLine = compile("(?:^|\\n)[A-Z][A-Z\\s]+(?:\\n|$)")
   private val pParaBreak = compile("\\n\\s*\\n")
-  private val pFormula = compile("[=+\\-*/^]|sqrt|sin|cos|tan|log")
 
   def detectDocumentStructure(text: String): String = {
     // Counts are pure functions of `text`, so they can be computed

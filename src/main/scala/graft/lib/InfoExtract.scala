@@ -1,7 +1,7 @@
 package graft.lib
 
 import java.util.regex.Pattern
-import graft.model.{ReceiptItem, StructuredInfo}
+import graft.model.ReceiptItem
 import Py._
 
 /** Structured key-value / receipt / table extraction [EQ]
@@ -13,26 +13,8 @@ object InfoExtract {
 
   import scala.collection.mutable.LinkedHashMap
 
-  /** extract_structured_info dispatch (information_extraction.py:42-53).
-    * `imageType` is the ImageType value string; null text → null result.
-    */
-  def extractStructuredInfo(text: String, imageType: String): Option[StructuredInfo] = {
-    if (text == null || text.isEmpty) return None
-    imageType match {
-      case "id_card" => Some(idCardInfo(text))
-      case "receipt" => Some(receiptInfo(text))
-      case "form" => Some(formInfo(text))
-      case "table" => Some(tableInfo(text))
-      case _ => Some(genericInfo(text))
-    }
-  }
-
-  private def kv(kind: String, fields: LinkedHashMap[String, String]): StructuredInfo =
-    StructuredInfo(kind, fields.toSeq.toMap, Seq.empty, Seq.empty, Seq.empty)
-
-  /** Ordered fields variant keeping insertion order for downstream
-    * renderers; Map in StructuredInfo loses order, so we also expose the
-    * ordered pairs when needed. */
+  /** Structured fields in the reference dicts' insertion order, as the
+    * downstream renderers need them. */
   final case class OrderedInfo(
       kind: String,
       fields: Vector[(String, String)],
@@ -40,6 +22,9 @@ object InfoExtract {
       headers: Vector[String],
       rows: Vector[Vector[(String, String)]])
 
+  /** extract_structured_info dispatch (information_extraction.py:42-53).
+    * `imageType` is the ImageType value string; null text → None.
+    */
   def extractOrdered(text: String, imageType: String): Option[OrderedInfo] = {
     if (text == null || text.isEmpty) return None
     imageType match {
@@ -120,9 +105,6 @@ object InfoExtract {
     extracted.toVector
   }
 
-  def idCardInfo(text: String): StructuredInfo =
-    StructuredInfo("id_card", idCardFields(text).toMap, Seq.empty, Seq.empty, Seq.empty)
-
   // --- extract_receipt_info (:136-276) --------------------------------------
 
   private val pRecDateLabeled = compile("(?:date|tanggal)[\\s:]+([0-9/\\-\\.]+)")
@@ -186,11 +168,6 @@ object InfoExtract {
     OrderedInfo("receipt", fields.toVector, items.result(), Vector.empty, Vector.empty)
   }
 
-  def receiptInfo(text: String): StructuredInfo = {
-    val o = receiptOrdered(text)
-    StructuredInfo("receipt", o.fields.toMap, o.items, Seq.empty, Seq.empty)
-  }
-
   // --- extract_form_info (:278-329) -------------------------------------------
   // The per-line loop is inert (the "meaningful value" regex matches the
   // empty string, so its negation always rejects —
@@ -218,9 +195,6 @@ object InfoExtract {
     fields.toVector
   }
 
-  def formInfo(text: String): StructuredInfo =
-    StructuredInfo("form", formFields(text).toMap, Seq.empty, Seq.empty, Seq.empty)
-
   // --- extract_table_info (:331-528) --------------------------------------------
 
   def tableOrdered(text: String): OrderedInfo = {
@@ -228,11 +202,6 @@ object InfoExtract {
     if (lines.exists(_.contains('|'))) delimitedTable(lines, '|')
     else if (lines.exists(_.contains('\t'))) delimitedTable(lines, '\t')
     else spaceDelimitedTable(lines)
-  }
-
-  def tableInfo(text: String): StructuredInfo = {
-    val o = tableOrdered(text)
-    StructuredInfo("table", Map.empty, Seq.empty, o.headers, o.rows.map(_.toMap))
   }
 
   private def isSeparatorRow(s: String): Boolean =
@@ -335,7 +304,4 @@ object InfoExtract {
   // (information_extraction.py:559) makes the loop inert. Preserved.
 
   def genericFields(text: String): Vector[(String, String)] = Vector.empty
-
-  def genericInfo(text: String): StructuredInfo =
-    StructuredInfo("generic", Map.empty, Seq.empty, Seq.empty, Seq.empty)
 }

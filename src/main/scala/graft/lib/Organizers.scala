@@ -5,22 +5,12 @@ import Py._
 
 /** The `_organize_*` family [EQ-surface, dead in live path]
   * (reference: lib/text_processing.py:711-1150). `format_text` is what
-  * the live request path calls; `_enhance_text_organization` and these
-  * organizers are exported-but-unreached (SURVEY.md §2.5 note). Ported
-  * so the full reference surface is callable; golden-tested directly.
+  * the live request path calls; these organizers (the targets of the
+  * reference's equally unreached `_enhance_text_organization` dispatch)
+  * are exported-but-unreached (SURVEY.md §2.5 note). Ported so the
+  * reference's organizers are callable; golden-tested directly.
   */
 object Organizers {
-
-  /** _enhance_text_organization dispatch (text_processing.py:711-742),
-    * keyed by our payload-kind strings. */
-  def enhanceTextOrganization(text: String, kind: String): String = kind match {
-    case "document" | "book_page" => organizeDocumentText(text)
-    case "form" => organizeFormText(text)
-    case "receipt" => organizeReceiptText(text)
-    case "id_card" => organizeIdCardText(text)
-    case "table" => organizeTableText(text)
-    case _ => defaultTextOrganization(text)
-  }
 
   private val pListItem = compile("^\\d+[\\.\\)]")
   private val pAllCapsColon = compile("^[A-Z][A-Z\\s]+:?")

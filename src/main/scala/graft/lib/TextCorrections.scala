@@ -1,6 +1,6 @@
 package graft.lib
 
-import java.util.regex.{Matcher, Pattern}
+import java.util.regex.Pattern
 import Py._
 
 /** Scalar text-correction layer [EQ].
@@ -20,15 +20,6 @@ object TextCorrections {
   // --- post_process_text (text_processing.py:77-146) -------------------
 
   private val pBullet = compile("[\\*\\+\\-\u2023\u25aa\u2022\u25cf\u00b7](?:\\s+|\\n)")
-  private val pDigL = compile("(?<=\\d)l(?=\\d)")
-  private val pDigI = compile("(?<=\\d)I(?=\\d)")
-  private val pDigO = compile("(?<=\\d)O(?=\\d)")
-  private val pDigS = compile("(?<=\\d)S(?=\\d)")
-  private val pDigZ = compile("(?<=\\d)Z(?=\\d)")
-  private val pDigB = compile("(?<=\\d)B(?=\\d)")
-  private val pLowUp = compile("(?<=[a-z])(?=[A-Z])")
-  private val pLetDig = compile("(?<=[a-zA-Z])(?=\\d)")
-  private val pDigLet = compile("(?<=\\d)(?=[a-zA-Z])")
   private val pMultiSpace = compile(" +")
   private val pDigConf = compile("(?<=\\d)[lIOSZB](?=\\d)")
   private val pSpacingBoundary =

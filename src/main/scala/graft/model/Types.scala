@@ -61,17 +61,6 @@ object DocStructure {
   * money stays a string — the reference never parses it). */
 final case class ReceiptItem(name: String, quantity: String, price: String)
 
-/** Tagged union of the reference's `structured_info` shapes
-  * (reference: lib/information_extraction.py:28-562). `kind` is one of
-  * id_card | receipt | form | table | generic.
-  */
-final case class StructuredInfo(
-    kind: String,
-    fields: Map[String, String], // id_card / form / generic key-values; receipt scalars
-    items: Seq[ReceiptItem], // receipt items
-    headers: Seq[String], // table headers
-    rows: Seq[Map[String, String]]) // table rows
-
 /** Full per-turn extraction output — the engine's output schema
   * (reference results dict assembled at lib/smartglass_ocr.py:628-653,
   * enriched at :1212-1246, final projection app/api/routes.py:976-981).

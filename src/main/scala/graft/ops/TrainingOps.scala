@@ -413,14 +413,14 @@ object TrainingOps {
     * works because persist() registers the RDD at call time). Callers
     * whose `finally` releases the checkpoint's INPUT blocks must stay
     * eager. */
-  private def trackedCheckpoint(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
+  private[graft] def trackedCheckpoint(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
     val out = df.localCheckpoint(eager)
     (out, sc.getPersistentRDDs.keySet.toSet -- before)
   }
 
-  private def releaseRdds(df: DataFrame, ids: Set[Int]): Unit = {
+  private[graft] def releaseRdds(df: DataFrame, ids: Set[Int]): Unit = {
     val live = df.sparkSession.sparkContext.getPersistentRDDs
     ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
   }
@@ -430,14 +430,7 @@ object TrainingOps {
     * dedup produces. For adversarial graphs (long paths, giant
     * components) use [[connectedComponentsStar]]: O(log n) rounds. */
   def labelPropagationComponents(pairs: DataFrame): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // persisted PRE-PARTITIONED on the probe key: every round's
-    // neighbor join then reuses the cached layout instead of
-    // re-exchanging the edge list per round (guide §2.4 — two
-    // operations keyed the same way share one exchange)
-    val edges = pairs.union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .repartition(col("id_b"))
-      .persist()
+    val edges = labelPropEdges(pairs).persist()
     // lazy: round 1's convergence aggregate materializes it (one job)
     var (labels, labelsIds) = trackedCheckpoint(
       edges.select(col("id_a").as("id")).distinct().withColumn("comp", col("id")),
@@ -450,21 +443,12 @@ object TrainingOps {
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 50) {
-      val neighborMin = edges
-        .join(labels.select(col("id").as("id_b"), col("comp").as("ncomp")), Seq("id_b"))
-        .groupBy(col("id_a").as("id"))
-        .agg(min("ncomp").as("nmin"))
       // ONE action per round (VERDICT r03 next #8): the checkpoint is
       // LAZY; the changed-count aggregate is the action that
       // materializes it, so the round runs one job instead of
       // checkpoint-then-count's two.
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val updated = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-          (col("nmin") < col("comp")).as("chg"))
-        .localCheckpoint(false)
+      val (updated, newIds) = trackedCheckpoint(labelPropRoundPlan(edges, labels), eager = false)
       changed = updated.agg(count(when(col("chg"), 1))).head().getLong(0)
-      val newIds = sc.getPersistentRDDs.keySet.toSet -- before
       // the superseded round's checkpoint blocks are dead now — release
       releaseRdds(updated, labelsIds)
       labels = updated.select("id", "comp")
@@ -539,7 +523,7 @@ object TrainingOps {
   // round's physical tree ([[starRoundPlan]]).
   private def largeStar(e: DataFrame): DataFrame = {
     val nbrs = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .repartition(col("u"))
+      .repartition(fixedParts(e), col("u"))
     val m = nbrs.groupBy("u").agg(least(min("v"), first("u")).as("m"))
     nbrs.join(m, Seq("u"))
       .filter(col("v") > col("u"))
@@ -553,7 +537,7 @@ object TrainingOps {
     val toMin = e.select(
       greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
-      .repartition(col("u"))
+      .repartition(fixedParts(e), col("u"))
     val m = toMin.groupBy("u").agg(min("v").as("m"))
     val reattached = toMin.join(m, Seq("u"))
       .filter(col("v") =!= col("m"))
@@ -571,10 +555,27 @@ object TrainingOps {
   private[graft] def starRoundPlan(edges: DataFrame): DataFrame =
     smallStar(largeStar(edges))
 
+  /** The label-propagation loop's edge list: both directions of every
+    * pair, PRE-PARTITIONED on the probe key so that, once persisted,
+    * every round's neighbor join reuses the cached layout instead of
+    * re-exchanging the edge list per round (guide §2.4 — two
+    * operations keyed the same way share one exchange). */
+  private[graft] def labelPropEdges(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+      .repartition(fixedParts(pairs), col("id_b"))
+
+  /** Partition count for the iterative loops' key repartitions. An
+    * explicit count makes the exchange REPARTITION_BY_NUM, which AQE
+    * never coalesces: a by-column repartition may shrink to one
+    * partition on a small round and stay there as the data grows. */
+  private def fixedParts(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
+
   /** One min-label-propagation round (neighbor-min aggregate + label
     * update join) as a LAZY plan over the loop's real inputs — the
-    * PERSISTED pre-partitioned edge list and a checkpointed label
-    * frame; x14's per-round tree, for the same plans/r06 record. */
+    * PERSISTED [[labelPropEdges]] and a checkpointed label frame; the
+    * loop runs this plan each round, and DumpPlans records it as x14's
+    * per-round tree. */
   private[graft] def labelPropRoundPlan(edges: DataFrame, labels: DataFrame): DataFrame = {
     val neighborMin = edges
       .join(labels.select(col("id").as("id_b"), col("comp").as("ncomp")), Seq("id_b"))
@@ -3201,12 +3202,7 @@ object TrainingOps {
     val teleport = (15L * scale / 100L) / n
     val r0Val = scale / n
     try {
-      var (r, rIds) = {
-        val r0 = nodes.select(col("id"), lit(r0Val).as("r"))
-        val before = nodes.sparkSession.sparkContext.getPersistentRDDs.keySet.toSet
-        val out = r0.localCheckpoint(true)
-        (out, nodes.sparkSession.sparkContext.getPersistentRDDs.keySet.toSet -- before)
-      }
+      var (r, rIds) = trackedCheckpoint(nodes.select(col("id"), lit(r0Val).as("r")))
       for (i <- 1 to iterations) {
         val contrib = r.join(edgesW, r("id") === edgesW("src"))
           .select(col("dst").as("id"), expr("r div outdeg").as("c"))
@@ -3215,10 +3211,7 @@ object TrainingOps {
           .select(col("id"),
             (lit(teleport) + expr("85 * coalesce(s, 0L) div 100")).as("r"))
         if (i % checkpointEvery == 0 || i == iterations) {
-          val sc = nodes.sparkSession.sparkContext
-          val before = sc.getPersistentRDDs.keySet.toSet
-          val out = next.localCheckpoint(true)
-          val newIds = sc.getPersistentRDDs.keySet.toSet -- before
+          val (out, newIds) = trackedCheckpoint(next)
           releaseRdds(r, rIds)
           r = out; rIds = newIds
         } else r = next

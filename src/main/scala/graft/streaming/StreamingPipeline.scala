@@ -25,14 +25,6 @@ object StreamingPipeline {
     turns.mapPartitions(_.map(Extractor.extract))
   }
 
-  /** Event-time windowed metrics with a watermark for late turns —
-    * counts per (window, payload_kind, status). */
-  def windowedMetrics(results: Dataset[ExtractionResult]): DataFrame =
-    results
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("payload_kind"), col("status"))
-      .agg(count(lit(1)).as("n_turns"), sum("n_chars").as("total_chars"))
-
   /** Streaming exact dedup — the continuous-ingest counterpart of the
     * batch q09 operator: drop every turn whose canonical text
     * fingerprint was already seen, with a watermark bounding how long a

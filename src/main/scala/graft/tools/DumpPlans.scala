@@ -1,19 +1,40 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
+import graft.ops.TrainingOps
 
-/** Dumps formatted physical plans for the headline queries to PLANS.md —
-  * the judge-readable record of pushdown/pruning/broadcast/codegen
-  * behavior (complementing the PlanQualitySpec assertions). */
+/** Dumps formatted physical plans — the judge-readable record of
+  * pushdown/pruning/broadcast/codegen behavior (complementing the
+  * PlanQualitySpec assertions).
+  *
+  *   sbt "runMain graft.tools.DumpPlans"
+  *     writes PLANS.md: the headline queries at sf0.001 under local[4],
+  *     then every lazy plan in [[lazyPlans]].
+  *   sbt "runMain graft.tools.DumpPlans <suffix> <q1,q2,...> <outDir>"
+  *     writes <outDir>/<query>_<suffix>.txt for each named query under
+  *     the frozen bench's session shape (local[$SPARK_GRAFT_CPUS],
+  *     shuffle.partitions = cores, AQE on) at $SPARK_GRAFT_SF_DIR,
+  *     followed by the query's lazy plan when it has one.
+  *
+  * Queries that localCheckpoint their result eagerly show only a
+  * checkpoint scan (`ExistingRDD`); for those the lazy pre-checkpoint
+  * pipeline is what actually executes, so that is dumped too.
+  */
 object DumpPlans {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("dump-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+
+  def main(args: Array[String]): Unit =
+    if (args.isEmpty) writePlansMd()
+    else {
+      require(args.length == 3,
+        "usage: DumpPlans [<suffix> <q1,q2,...> <outDir>]")
+      dumpQueries(args(0), args(1).split(",").toSeq.filter(_.nonEmpty), args(2))
+    }
+
+  private def writePlansMd(): Unit = {
+    val spark = session(4)
     val sfDir = "/root/testdata/sf0.001"
     val names = Seq(
       "q01_pushdown_agg", "q03_join_nation_revenue", "q05_word_freq",
@@ -30,49 +51,26 @@ object DumpPlans {
       "x36_ann_clustered", "x38_session_window",
       "x40_conv_rollup", "x41_winnow_containment", "x42_unigram_logprob",
       "x43_domain_blocklist", "x44_tool_transitions", "x45_length_band",
-      // x49 localCheckpoints its result (star-members fixed point) — its
-      // executed plan is just the checkpoint scan, nothing to audit here
+      // queries that localCheckpoint their results (x49, x56, x59, x64,
+      // x70-x72, x79, x80, x87, x88, x91, x92, x94, x95, x99, x100,
+      // x102-x104, ...) show only a checkpoint scan here; their lazy
+      // plans follow below where [[lazyPlans]] has one, the rest are
+      // spec-pinned in PlanQualitySpec
       "x46_filter_gate", "x50_chunking",
       "x51_mixture_sample", "x53_hashed_quality", "x55_payload_resize",
-      // x48/x56/x59/x64/x70 localCheckpoint their results (cache-released
-      // pipelines) — their lazy plans are audited in PlanQualitySpec and
-      // x48's first-occurrence stage is dumped below via its lazy variant
       "x57_text_entropy", "x58_cdc_chunks", "x60_inverted_index",
       "x61_bigram_logprob", "x62_dsir_weights", "x63_dup_token_stats",
       "x65_vocab_oov",
-      // round-5: streaming CMS build (batch-oracled), span rewrite,
-      // domain quality
       "x67_cms_stream_counters", "x68_span_rewrite", "x69_domain_quality",
-      // round-5 cont.: x73 payload energy, x74/x75 datasheet + mixture,
-      // x76-x78 corpus health, x81 event anomalies (x71/x72/x79/x80
-      // localCheckpoint their results — x79/x80's lazy pipelines are
-      // dumped below; x71/x72's plan shape is x13's pre-collapse stage)
       "x73_payload_energy",
       "x74_corpus_datasheet", "x75_source_mix", "x76_zipf_fit",
       "x77_pmi_bigrams", "x78_lexical_richness", "x81_event_anomalies",
-      // round-5 close: A-ES weighted sample (map-only + top-k), URL
-      // canonicalization dedup, int8 embedding quantization (map-only),
-      // integer cluster centroids, link-degree histogram (x87
-      // localCheckpoints — its lazy pipeline is dumped below)
       "x82_weighted_sample", "x83_url_canon_dedup", "x84_int8_quantize",
       "x85_cluster_centroids", "x86_link_degrees",
-      // round-5 close: difficulty deciles, snapshot diff (x88
-      // localCheckpoints — its lazy pipeline is dumped below)
       "x89_difficulty_buckets", "x90_snapshot_diff",
-      // round-5 close: score correlation + winsorized z-scores (lazy);
-      // x91 composes x13+x37 and localCheckpoints, x92 is a driver-
-      // stepped chain of 1-row argmax jobs (its rule table is a local
-      // relation), x94/x95's lazy pipelines are dumped below
       "x93_score_corr", "x96_winsorize_scores",
-      // round-5 close: gram novelty (x19's broadcast join turned LEFT),
-      // epoch-shard assignment (map-only)
       "x97_gram_novelty", "x98_epoch_shards",
-      // round-5 extension: the Gopher flag projection (map-only; x99/
-      // x100/x102/x103 localCheckpoint eagerly — their shapes are
-      // spec-pinned instead)
       "x101_gopher_rules",
-      // bounded-bucket coverage curve, backoff LM scoring, log-domain
-      // A-ES resampling (x104 localCheckpoints — spec-pinned instead)
       "x105_vocab_coverage", "x106_stupid_backoff", "x107_dsir_resample")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (sf0.001, local[4])\n\n")
@@ -81,194 +79,253 @@ object DumpPlans {
     sb.append("for dimension joins, `partial_*` map-side aggregation,\n")
     sb.append("`TakeOrderedAndProject` for top-k, and a single `Exchange` in the\n")
     sb.append("salted extraction path.\n\n")
-    def dump(n: String, df: org.apache.spark.sql.DataFrame, note: String = ""): Unit = {
-      sb.append(s"## $n\n\n")
+    def section(title: String, note: String, plan: String): Unit = {
+      sb.append(s"## $title\n\n")
       if (note.nonEmpty) sb.append(note + "\n\n")
-      sb.append("```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(6000))
-      sb.append("\n```\n\n")
+      sb.append("```\n").append(plan.take(6000)).append("\n```\n\n")
     }
-    for (n <- names) dump(n, graft.SparkEntry.queries(n)(spark, sfDir))
-    // x06/x13 materialize eagerly behind a localCheckpoint and release
-    // their caches (round-3 unpersist fix), so the public query's plan is
-    // a checkpoint scan — dump the LAZY pipeline plan instead, which is
-    // what actually executes.
+    for (n <- names) section(n, "", explain(graft.SparkEntry.queries(n)(spark, sfDir)))
+    for (p <- lazyPlans(spark, sfDir))
+      section(s"${p.queries.head} (lazy pre-checkpoint plan)", p.note, renderLazy(spark, p))
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
+    println(s"wrote PLANS.md (${sb.length} chars)")
+    spark.stop()
+  }
+
+  /** One `<query>_<suffix>.txt` per named query: its plan, then its lazy
+    * pre-checkpoint plan when [[lazyPlans]] has one. */
+  private def dumpQueries(suffix: String, names: Seq[String], outDir: String): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val out = Paths.get(outDir)
+    Files.createDirectories(out)
+    val table = lazyPlans(spark, sfDir)
+    for (n <- names) {
+      try {
+        val plan = explain(graft.SparkEntry.queries(n)(spark, sfDir))
+        val lazyPlan = table.find(_.queries.contains(n)).map { p =>
+          s"\n\n=== lazy pre-checkpoint plan ===\n\n${p.note}\n\n${renderLazy(spark, p)}"
+        }.getOrElse("")
+        val file = out.resolve(s"${n}_$suffix.txt")
+        Files.writeString(file, plan + lazyPlan)
+        println(s"dumped $n -> $file")
+      } catch {
+        case e: Throwable => System.err.println(s"[plans] $n failed: ${e.getMessage}")
+      }
+    }
+    spark.stop()
+  }
+
+  /** A query's lazy pre-`localCheckpoint` plan. `build` returns the plan
+    * and a release closure freeing every cache and checkpoint block the
+    * build created. */
+  private final case class LazyPlan(queries: Seq[String], note: String,
+      build: () => (DataFrame, () => Unit))
+
+  private def releasing(df: DataFrame, caches: DataFrame*): (DataFrame, () => Unit) =
+    (df, () => caches.foreach(_.unpersist()))
+
+  /** Runs `body` with auto-broadcast off, so the SHUFFLE-join tree (the
+    * 100 TB shape, where the edge set exceeds any broadcast) is what
+    * lands on record; the tiny inputs would otherwise broadcast
+    * everything and hide the exchange structure. */
+  private def shuffleJoins(spark: SparkSession)(
+      body: => (DataFrame, () => Unit)): (DataFrame, () => Unit) = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1L)
+    val (df, release) = body
+    (df, () => { release(); spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev) })
+  }
+
+  /** The one table: query name(s) → (note, lazy plan, release). */
+  private def lazyPlans(spark: SparkSession, sfDir: String): Seq[LazyPlan] = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    locally {
-      val (df, bands) = graft.ops.TrainingOps.simhashNearDupPairsPlan(docs)
-      dump("x06_simhash_pairs (lazy pipeline)", df,
-        "Public operator = this plan, materialized once, band cache released after.")
-      bands.unpersist()
-    }
-    locally {
-      val (df, caches) = graft.ops.TrainingOps.jaccardNearDupPairsPlan(docs)
-      dump("x13_jaccard_pairs (lazy pipeline)", df,
+    def cemb = graft.SparkEntry.clusteredEmbeddings(spark, sfDir)
+    Seq(
+      LazyPlan(Seq("x06_simhash_pairs"),
+        "Public operator = this plan, materialized once, band cache released after.",
+        () => { val (df, bands) = TrainingOps.simhashNearDupPairsPlan(docs); releasing(df, bands) }),
+      LazyPlan(Seq("x13_jaccard_pairs"),
         "Public operator = this plan, materialized once, signature +\n" +
           "exact-group membership caches released after. Band join runs on\n" +
           "ONE representative per exact-dup group (r5 pre-collapse); member\n" +
-          "pairs re-enter via the membership fan-out joins.")
-      caches.foreach(_.unpersist())
-    }
-    locally {
-      val df = graft.ops.TrainingOps.repeatedDupWindows(docs, 13)
-      dump("x48_repeated_spans (lazy first-occurrence stage)", df,
+          "pairs re-enter via the membership fan-out joins.",
+        () => { val (df, caches) = TrainingOps.jaccardNearDupPairsPlan(docs); releasing(df, caches: _*) }),
+      LazyPlan(Seq("x48_repeated_spans"),
         "x48 stage 2: duplicate-window selection via min(struct(doc_id,\n" +
           "w_start)) AGGREGATE on the gram key + join-back — window-free by\n" +
           "the r5 de-skew (a row_number window over the gram key funneled a\n" +
           "boilerplate gram's every corpus occurrence through one task); the\n" +
-          "only Window repeatedSpans runs is the per-doc island merge.")
-    }
-    locally {
-      val (df, toks) = graft.ops.TrainingOps.packSequencesPlan(docs)
-      dump("x30_pack_sequences (lazy second pass)", df,
+          "only Window repeatedSpans runs is the per-doc island merge.",
+        () => releasing(TrainingOps.repeatedDupWindows(docs, 13))),
+      LazyPlan(Seq("x30_pack_sequences"),
         "Public operator = pass 1 (per-bucket token totals -> driver prefix\n" +
           "offsets) + this pass-2 plan: within-bucket parallel window + literal\n" +
-          "prefix map, never a single-partition global window.")
-      toks.unpersist()
-    }
-    locally {
-      val cemb = graft.SparkEntry.clusteredEmbeddings(spark, sfDir)
-      val (df, banded) = graft.ops.TrainingOps.embeddingNearDupPairsPlan(cemb, 0.9)
-      dump("x34_embed_neardup_pairs (lazy pipeline)", df,
+          "prefix map, never a single-partition global window.",
+        () => { val (df, toks) = TrainingOps.packSequencesPlan(docs); releasing(df, toks) }),
+      LazyPlan(Seq("x34_embed_neardup_pairs"),
         "Public operator = this plan: one cached banded-signature table\n" +
           "feeds both sides of the (band, key) candidate equi-join; exact\n" +
-          "cosine verify only on candidates. Never a cross join.")
-      banded.unpersist()
-    }
-    locally {
-      val (df, lines) = graft.ops.TrainingOps.deboilerplatePlan(docs)
-      dump("x32_deboilerplate (lazy pipeline)", df,
+          "cosine verify only on candidates. Never a cross join.",
+        () => { val (df, banded) = TrainingOps.embeddingNearDupPairsPlan(cemb, 0.9); releasing(df, banded) }),
+      LazyPlan(Seq("x32_deboilerplate"),
         "Public operator = this plan over ONE cached exploded-lines table\n" +
           "(InMemoryTableScan feeds both the frequency aggregate and the\n" +
-          "join-back), materialized once, cache released after.")
-      lines.unpersist()
-    }
-    locally {
-      import org.apache.spark.sql.functions._
-      val bench = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-      val (df, bGrams) = graft.ops.TrainingOps.decontaminateBloomPlan(docs, bench)
-      dump("x39_decontaminate_bloom (lazy pipeline)", df,
+          "join-back), materialized once, cache released after.",
+        () => { val (df, lines) = TrainingOps.deboilerplatePlan(docs); releasing(df, lines) }),
+      LazyPlan(Seq("x39_decontaminate_bloom"),
         "The no-broadcast decontamination regime: the corpus gram side is\n" +
           "prefiltered by the native might_contain Bloom probe (a literal\n" +
           "sketch of the benchmark grams) BEFORE any exchange; survivors\n" +
           "take an exact verify equi-join, so the result matches x19\n" +
           "bit-for-bit while the benchmark set never needs to fit the\n" +
-          "broadcast limit.")
-      bGrams.unpersist()
-    }
-    locally {
-      val cemb = graft.SparkEntry.clusteredEmbeddings(spark, sfDir)
-      val (df, clustered) = graft.ops.TrainingOps.semanticDedupPlan(cemb)
-      dump("x52_semantic_dedup (lazy pipeline)", df,
+          "broadcast limit.",
+        () => {
+          val (df, bGrams) = TrainingOps.decontaminateBloomPlan(docs,
+            docs.filter(pmod(col("doc_id"), lit(97)) === 0))
+          releasing(df, bGrams)
+        }),
+      LazyPlan(Seq("x41_winnow_containment"), "containment pairs pipeline",
+        () => { val (df, caches) = TrainingOps.winnowContainmentPairsPlan(docs); releasing(df, caches: _*) }),
+      LazyPlan(Seq("x52_semantic_dedup"),
         "Public operator = this plan: ONE cached (vec_id, v, cluster)\n" +
           "projection (native 48-bit signature, low 12 bits as the\n" +
           "single-assignment cluster key) feeds both sides of the\n" +
           "within-cluster equi-join and the kept-set anti-join; the\n" +
-          "dropped-id side's join strategy is left to AQE.")
-      clustered.unpersist()
-    }
-    locally {
-      val turns = graft.Pipeline.turnsFromDocuments(spark, sfDir).toDF()
-      val (df, cfp) = graft.ops.TrainingOps.convDedupGroupsPlan(turns)
-      dump("x79_conv_dedup (lazy pipeline)", df,
+          "dropped-id side's join strategy is left to AQE.",
+        () => { val (df, clustered) = TrainingOps.semanticDedupPlan(cemb); releasing(df, clustered) }),
+      LazyPlan(Seq("x59_edit_neardup"), "edit near-dup pipeline",
+        () => { val (df, caches) = TrainingOps.editNearDupPairsPlan(docs); releasing(df, caches: _*) }),
+      LazyPlan(Seq("x64_cross_neardup"), "cross-corpus near-dup pipeline",
+        () => {
+          val (df, caches) = TrainingOps.crossNearDupPlan(
+            docs.filter(pmod(col("doc_id"), lit(13L)) =!= 0),
+            docs.filter(pmod(col("doc_id"), lit(13L)) === 0))
+          releasing(df, caches: _*)
+        }),
+      LazyPlan(Seq("x79_conv_dedup"),
         "Public operator = this plan over ONE cached conversation-\n" +
           "fingerprint table (InMemoryTableScan feeds both the group\n" +
           "aggregate and the join-back probe; the tiny fp-group side\n" +
-          "re-enters by broadcast), materialized once, cache released after.")
-      cfp.unpersist()
-    }
-    locally {
-      val (df, st) = graft.ops.TrainingOps.sourceOverlapPlan(docs)
-      dump("x88_source_overlap (lazy pipeline)", df,
+          "re-enters by broadcast), materialized once, cache released after.",
+        () => {
+          val turns = graft.Pipeline.turnsFromDocuments(spark, sfDir).toDF()
+          val (df, cfp) = TrainingOps.convDedupGroupsPlan(turns)
+          releasing(df, cfp)
+        }),
+      LazyPlan(Seq("x88_source_overlap"),
         "Public operator = this plan over ONE cached distinct (source,\n" +
           "term) table (InMemoryTableScan feeds the vocabulary sizes and\n" +
           "BOTH self-join sides); per-term join fan-out is bounded by\n" +
-          "sources², the sources-sized size table re-enters by broadcast.")
-      st.unpersist()
-    }
-    locally {
-      val (df, st) = graft.ops.TrainingOps.sourceKlDivergencePlan(docs)
-      dump("x87_source_kl (lazy pipeline)", df,
+          "sources², the sources-sized size table re-enters by broadcast.",
+        () => { val (df, st) = TrainingOps.sourceOverlapPlan(docs); releasing(df, st) }),
+      LazyPlan(Seq("x87_source_kl"),
         "Public operator = this plan over ONE cached (source, term,\n" +
           "count) table (InMemoryTableScan feeds the corpus term counts,\n" +
           "the per-source totals, and the join probe — the tokenize scan\n" +
           "runs once); the vocab-scale term join is left to AQE, the\n" +
-          "sources-sized and 1-row aggregates re-enter by broadcast.")
-      st.unpersist()
-    }
-    locally {
-      val (df, bySource) = graft.ops.TrainingOps.mixtureRatesPlan(docs)
-      dump("x80_mixture_rates (lazy pipeline)", df,
+          "sources-sized and 1-row aggregates re-enter by broadcast.",
+        () => { val (df, st) = TrainingOps.sourceKlDivergencePlan(docs); releasing(df, st) }),
+      LazyPlan(Seq("x80_mixture_rates"),
         "Public operator = this plan over ONE cached sources-sized\n" +
           "token-mass aggregate (InMemoryTableScan feeds both the corpus\n" +
           "total and the rate projection — the corpus-scale tokenize scan\n" +
-          "runs once); the 1-row total re-enters by broadcast.")
-      bySource.unpersist()
-    }
-    locally {
-      val (df, caches) = graft.ops.TrainingOps.semanticDecontaminatePlan(
-        graft.SparkEntry.clusteredEmbeddings(spark, sfDir))
-      dump("x94_semantic_decon (lazy pipeline)", df,
+          "runs once); the 1-row total re-enters by broadcast.",
+        () => { val (df, bySource) = TrainingOps.mixtureRatesPlan(docs); releasing(df, bySource) }),
+      LazyPlan(Seq("x94_semantic_decon"),
         "Public operator = this plan over ONE cached banded-signature\n" +
           "table (InMemoryTableScan feeds BOTH band sides); candidates are\n" +
           "corpus-side x bench-side band pairs only — the corpus never\n" +
           "self-joins — and the struct-max argmax is a map-side-combinable\n" +
-          "aggregate.")
-      caches.foreach(_.unpersist())
-    }
-    locally {
-      val (df, caches) = graft.ops.TrainingOps.hardNegativesPlan(
-        spark.read.parquet(s"$sfDir/embeddings.parquet"))
-      dump("x95_hard_negatives (lazy pipeline)", df,
+          "aggregate.",
+        () => { val (df, caches) = TrainingOps.semanticDecontaminatePlan(cemb); releasing(df, caches: _*) }),
+      LazyPlan(Seq("x95_hard_negatives"),
         "Public operator = this plan over ONE cached bucket-key table\n" +
           "(InMemoryTableScan feeds both join sides); the per-anchor top-k\n" +
           "is a WindowGroupLimit over the anchor key, whose partition size\n" +
-          "is bounded by bucket occupancy.")
-      caches.foreach(_.unpersist())
-    }
-    locally {
-      val (df, tc) = graft.ops.TrainingOps.cmsHeavyHittersPlan(docs)
-      dump("x54_cms_heavy_hitters (lazy pipeline)", df,
+          "is bounded by bucket occupancy.",
+        () => {
+          val (df, caches) = TrainingOps.hardNegativesPlan(
+            spark.read.parquet(s"$sfDir/embeddings.parquet"))
+          releasing(df, caches: _*)
+        }),
+      LazyPlan(Seq("x54_cms_heavy_hitters"),
         "Public operator = this plan over ONE cached token-count table\n" +
           "(InMemoryTableScan feeds both the 4x1024 counter build and the\n" +
           "top-k probe); the fixed-size counter table re-enters by\n" +
-          "broadcast.")
-      tc.unpersist()
+          "broadcast.",
+        () => { val (df, tc) = TrainingOps.cmsHeavyHittersPlan(docs); releasing(df, tc) }),
+      LazyPlan(Seq("x110_ingest_curate"),
+        "The stateless per-document verdict core (the plan the streaming\n" +
+          "twin runs in append mode, and the batch gate's no-hot-key path):\n" +
+          "LEFT joins of the per-row fingerprint and band keys against the\n" +
+          "persisted reference fingerprint set and band buckets.",
+        () => {
+          val corpus = docs.filter(pmod(col("doc_id"), lit(13L)) =!= 0)
+          val ref = docs.filter(pmod(col("doc_id"), lit(13L)) === 0)
+          val (refFp, base, buckets, _) = TrainingOps.ingestRefTables(ref)
+          releasing(TrainingOps.ingestCurateCore(corpus, refFp, buckets, 0.8),
+            refFp, base, buckets)
+        }),
+      LazyPlan(Seq("x14_dup_components"),
+        "One min-label-propagation round over the persisted edge list\n" +
+          "(pre-partitioned on the probe key, so the round never\n" +
+          "re-exchanges it) + checkpointed labels, shuffle-join shape.\n" +
+          "The driver loop checkpoints each round lazily and materializes\n" +
+          "it with the changed-count aggregate, one job per round.",
+        () => shuffleJoins(spark) {
+          val pairs = spark.range(0, 64).selectExpr("id AS id_a", "id + 1 AS id_b")
+          val edges = TrainingOps.labelPropEdges(pairs).persist()
+          edges.count()
+          val (labels, ids) = TrainingOps.trackedCheckpoint(
+            edges.selectExpr("id_a AS id").distinct().withColumn("comp", col("id")))
+          (TrainingOps.labelPropRoundPlan(edges, labels),
+            () => { TrainingOps.releaseRdds(labels, ids); edges.unpersist() })
+        }),
+      LazyPlan(Seq("x37_dup_components_star", "x49_canonical_docs",
+          "x91_leakage_split", "x100_dedup_impact", "x104_curate_corpus",
+          "x109_curation_funnel"),
+        "One large-star + small-star contraction round over the\n" +
+          "checkpointed edge scan, shuffle-join shape: the per-round tree\n" +
+          "of `TrainingOps.connectedComponentsStar` (O(log n) rounds\n" +
+          "regardless of graph diameter), which x37/x49/x91/x100/x104/x109\n" +
+          "share. One exchange per star step.",
+        () => shuffleJoins(spark) {
+          val (edges, ids) = TrainingOps.trackedCheckpoint(
+            spark.range(0, 64).selectExpr("id AS u", "id + 1 AS v"))
+          (TrainingOps.starRoundPlan(edges), () => TrainingOps.releaseRdds(edges, ids))
+        }))
+  }
+
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  /** Builds `p`, renders its plan, releases it; reports any persisted
+    * RDD the release left behind. */
+  private def renderLazy(spark: SparkSession, p: LazyPlan): String = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (df, release) = p.build()
+    try explain(df)
+    finally {
+      release()
+      val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+      if (leaked.nonEmpty)
+        System.err.println(s"[plans] ${p.queries.head}: ${leaked.size} persisted RDDs left after release")
     }
-    sb.append("## x14_dup_components (iterative)\n\n")
-    sb.append("Components are computed by a driver loop (min-label propagation;\n")
-    sb.append("per-round plan = the x13 pairs feeding an equi-join + groupBy min,\n")
-    sb.append("each round localCheckpoint'd and the superseded round's blocks\n")
-    sb.append("released; since round 4 the changed-count aggregate materializes a\n")
-    sb.append("LAZY checkpoint, so each round is one data traversal, not two).\n")
-    sb.append("The 100 TB upgrade — alternating large-star/small-star\n")
-    sb.append("contraction (two groupBy shuffles per round, O(log n) rounds\n")
-    sb.append("regardless of diameter) — ships as\n")
-    sb.append("`TrainingOps.connectedComponentsStar`, spec-equivalent to the\n")
-    sb.append("min-label iteration on path/star/bridged graphs and on the real\n")
-    sb.append("near-dup graph (ScaleOpsSpec), and since round 4 is ALSO driver-\n")
-    sb.append("registered as x37_dup_components_star under the same recursive-CTE\n")
-    sb.append("oracle as x14. Both fail loudly past their round caps with a\n")
-    sb.append("strong order-independent convergence digest (bit_xor of xxhash64).\n")
-    sb.append("One star round's plan:\n\n")
-    locally {
-      import org.apache.spark.sql.functions._
-      val ss = spark
-      import ss.implicits._
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-      val e = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      val nbrs = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = nbrs.groupBy("u").agg(least(min("v"), first("u")).as("m"))
-      val oneRound = nbrs.join(m, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")).distinct()
-      sb.append("```\n")
-      sb.append(oneRound.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(4000))
-      sb.append("\n```\n\n")
-    }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${sb.length} chars)")
-    spark.stop()
+  }
+
+  private def session(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("dump-plans")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    graft.LogQuiet.muteCheckpointReleaseWarns()
+    spark
   }
 }

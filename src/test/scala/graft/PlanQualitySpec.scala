@@ -758,8 +758,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     val pairs = spark.range(0, 64).selectExpr("id AS id_a", "id + 1 AS id_b")
-    val edges = pairs.union(pairs.selectExpr("id_b AS id_a", "id_a AS id_b"))
-      .repartition(col("id_b")).persist()
+    val edges = graft.ops.TrainingOps.labelPropEdges(pairs).persist()
     try {
       edges.count()
       val labels = edges.selectExpr("id_a AS id").distinct()
@@ -778,6 +777,31 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       edges.unpersist()
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     }
+  }
+
+  test("loop repartitions carry an explicit partition count (never AQE-coalesced to one)") {
+    // A by-column repartition (REPARTITION_BY_COL) is advisory: AQE may
+    // coalesce it to a single partition on a small round. The star
+    // round and the label-prop edge list fix their count instead.
+    val edges = spark.range(0, 64).selectExpr("id AS u", "id + 1 AS v").localCheckpoint(true)
+    val pairs = spark.range(0, 64).selectExpr("id AS id_a", "id + 1 AS id_b")
+    for ((what, df) <- Seq(
+        "star round" -> graft.ops.TrainingOps.starRoundPlan(edges),
+        "label-prop edge list" -> graft.ops.TrainingOps.labelPropEdges(pairs))) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("REPARTITION_BY_NUM"), s"$what: no fixed-count repartition:\n$p")
+      assert(!p.contains("REPARTITION_BY_COL"), s"$what: advisory repartition:\n$p")
+    }
+  }
+
+  test("SparkEntry.entry: one successful row per document, ordered by (conv_id, turn_idx)") {
+    val rows = SparkEntry.entry(spark).collect()
+    val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    assert(rows.length == nDocs)
+    val keys = rows.map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"))).toSeq
+    assert(keys == keys.sorted, "entry rows out of (conv_id, turn_idx) order")
+    assert(keys.distinct.length == keys.length, "duplicate (conv_id, turn_idx) keys")
+    assert(!rows.exists(_.getAs[String]("status") == "error"))
   }
 
   test("x110 core: the Generate barriers keep the md5 shingle chain computed once") {
