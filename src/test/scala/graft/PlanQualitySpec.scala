@@ -106,28 +106,28 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // inspect the LAZY plan (the public operator materializes it eagerly
     // and then releases the cache — round-3 unpersist fix)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val (df, bands) = graft.ops.TrainingOps.simhashNearDupPairsPlan(docs)
+    val s = graft.ops.TrainingOps.simhashNearDupPairsPlan(docs)
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.contains("InMemoryTableScan"),
         s"expected the persisted signature table on both join sides:\n$p")
       // the expensive fingerprint aggregate must not be inlined into a Filter
       val filterLines = p.linesIterator.filter(_.trim.startsWith("+- Filter")).mkString("\n")
       assert(!filterLines.contains("aggregate("),
         s"simhash aggregate leaked into a Filter:\n$filterLines")
-    } finally bands.unpersist()
+    } finally s.release()
   }
 
   test("x13: jaccard pipeline reads the cached signature table, no cross join") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val (df, caches) = graft.ops.TrainingOps.jaccardNearDupPairsPlan(docs)
+    val s = graft.ops.TrainingOps.jaccardNearDupPairsPlan(docs)
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.contains("InMemoryTableScan"),
         s"expected the persisted hash-array table behind the band join:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"x13 must stay an equi-join pipeline:\n$p")
-    } finally caches.foreach(_.unpersist())
+    } finally s.release()
   }
 
   test("x06/x13/x14: caches are released after the result materializes") {
@@ -166,9 +166,9 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // occurrence of a mega-frequent line (a boilerplate footer at corpus
     // scale) through ONE partition; the aggregate gets map-side combine
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val (df, lines) = graft.ops.TrainingOps.paragraphDedupPlan(docs)
+    val s = graft.ops.TrainingOps.paragraphDedupPlan(docs)
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(!p.contains("Window"),
         s"first-occurrence selection must not use a window:\n$p")
       assert(p.contains("InMemoryTableScan"),
@@ -177,7 +177,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       // same tightening as the x48 pin: require the min itself
       assert(p.contains("partial_min"),
         s"expected a partial_min (map-side combinable) on the line key:\n$p")
-    } finally lines.unpersist()
+    } finally s.release()
   }
 
   test("x48: first-occurrence pick is a min-struct aggregate, not a hot-gram window") {
@@ -198,14 +198,14 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("x59: edit-distance pipeline reads the cached text table, equi-joins only") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val (df, caches) = graft.ops.TrainingOps.editNearDupPairsPlan(docs)
+    val s = graft.ops.TrainingOps.editNearDupPairsPlan(docs)
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.contains("InMemoryTableScan"),
         s"expected the persisted norm/signature table behind bands + verify:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"the O(len²) DP must run only on band-bucketed candidates:\n$p")
-    } finally caches.foreach(_.unpersist())
+    } finally s.release()
   }
 
   test("x64: cross-corpus band join reads both cached signature tables, no cross join") {
@@ -216,14 +216,14 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val ref = d.filter(org.apache.spark.sql.functions.pmod(
       org.apache.spark.sql.functions.col("doc_id"),
       org.apache.spark.sql.functions.lit(13L)) === 0)
-    val (df, caches) = graft.ops.TrainingOps.crossNearDupPlan(corpus, ref)
+    val s = graft.ops.TrainingOps.crossNearDupPlan(corpus, ref)
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.linesIterator.count(_.contains("InMemoryTableScan")) >= 2,
         s"expected BOTH persisted signature tables behind the band join:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"x64 must stay an equi-join pipeline:\n$p")
-    } finally caches.foreach(_.unpersist())
+    } finally s.release()
   }
 
   test("x56/x59: caches are released after the result materializes") {
@@ -277,16 +277,16 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("x30: pack pass 2 windows PER BUCKET — no single-partition global window") {
-    val (df, toks) = graft.ops.TrainingOps.packSequencesPlan(
+    val s = graft.ops.TrainingOps.packSequencesPlan(
       spark.read.parquet(s"$sfDir/documents.parquet"))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.contains("Window"), p)
       assert(!p.contains("SinglePartition"),
         s"global prefix sum must not funnel through one partition:\n$p")
       assert(p.contains("hashpartitioning(bucket"),
         s"the running sum must partition by the bucket key:\n$p")
-    } finally toks.unpersist()
+    } finally s.release()
   }
 
   test("x31: stratified sample pre-prunes per partition (WindowGroupLimit, partial + final)") {
@@ -300,38 +300,38 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("x32: one cached exploded-lines table feeds both the frequency agg and the join-back") {
-    val (df, lines) = graft.ops.TrainingOps.deboilerplatePlan(
+    val s = graft.ops.TrainingOps.deboilerplatePlan(
       spark.read.parquet(s"$sfDir/documents.parquet"))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       // each InMemoryTableScan prints its cached subtree, so the raw
       // FileScan text appears once PER branch — the single-materialization
       // pin is: both branches read InMemoryTableScans of the one
       // InMemoryRelation, and no FileScan exists outside a cached subtree
       assert(p.linesIterator.count(_.contains("InMemoryTableScan")) >= 2,
         s"both branches must read the cached line table:\n$p")
-      val plain = df.queryExecution.executedPlan.collectLeaves()
+      val plain = s.plan.queryExecution.executedPlan.collectLeaves()
         .count(l => !l.toString().contains("InMemoryTableScan"))
       assert(plain == 0,
         s"no leaf may scan the corpus outside the cached line table:\n$p")
-    } finally lines.unpersist()
+    } finally s.release()
   }
 
   test("x41: one cached post-cap fingerprint table feeds the self-join sides and size aggregates") {
-    val (df, caches) = graft.ops.TrainingOps.winnowContainmentPairsPlan(
+    val s = graft.ops.TrainingOps.winnowContainmentPairsPlan(
       spark.read.parquet(s"$sfDir/documents.parquet"))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       // two self-join sides + two size-aggregate references — every one
       // must read the single cached fingerprint table, and nothing may
       // recompute the md5 stage from the corpus directly
       assert(p.linesIterator.count(_.contains("InMemoryTableScan")) >= 3,
         s"all fp references must read the cached table:\n$p")
-      val plain = df.queryExecution.executedPlan.collectLeaves()
+      val plain = s.plan.queryExecution.executedPlan.collectLeaves()
         .count(l => !l.toString().contains("InMemoryTableScan"))
       assert(plain == 0,
         s"no leaf may scan the corpus outside the cached fp table:\n$p")
-    } finally caches.foreach(_.unpersist())
+    } finally s.release()
   }
 
   test("x41: the df-cap is a groupBy + anti-join, never a Window keyed on fp") {
@@ -341,76 +341,76 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // and WindowExec partitions cannot be skew-split. The cap must stay a
     // map-side-combinable count + anti-join (the x48 window-free pin
     // template).
-    val (df, caches) = graft.ops.TrainingOps.winnowContainmentPairsPlan(
+    val s = graft.ops.TrainingOps.winnowContainmentPairsPlan(
       spark.read.parquet(s"$sfDir/documents.parquet"))
     try {
       // optimizedPlan deliberately: it prints the cached (InMemoryRelation)
       // subtrees too, so the cap inside the kept table's build plan is
       // visible — the executed plan would only show InMemoryTableScans
-      val p = df.queryExecution.optimizedPlan.toString()
+      val p = s.plan.queryExecution.optimizedPlan.toString()
       assert(!p.contains("Window"),
         s"x41 df-cap must not run a window keyed on fp:\n$p")
       assert(p.contains("LeftAnti"),
         s"expected the over-cap fingerprints removed via an anti-join:\n$p")
-    } finally caches.foreach(_.unpersist())
+    } finally s.release()
   }
 
   test("x79: one cached conversation-fingerprint table feeds the group agg and the join-back") {
-    val (df, cfp) = graft.ops.TrainingOps.convDedupGroupsPlan(
+    val s = graft.ops.TrainingOps.convDedupGroupsPlan(
       graft.Pipeline.turnsFromDocuments(spark, sfDir).toDF())
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.linesIterator.count(_.contains("InMemoryTableScan")) >= 2,
         s"both the group aggregate and the probe must read the cached fp table:\n$p")
-      val plain = df.queryExecution.executedPlan.collectLeaves()
+      val plain = s.plan.queryExecution.executedPlan.collectLeaves()
         .count(l => !l.toString().contains("InMemoryTableScan"))
       assert(plain == 0,
         s"no leaf may recompute the conversation fingerprints from the corpus:\n$p")
-    } finally cfp.unpersist()
+    } finally s.release()
   }
 
   test("x80: one cached token-mass aggregate feeds the corpus total and the rate projection") {
-    val (df, bySource) = graft.ops.TrainingOps.mixtureRatesPlan(
+    val s = graft.ops.TrainingOps.mixtureRatesPlan(
       spark.read.parquet(s"$sfDir/documents.parquet"))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.linesIterator.count(_.contains("InMemoryTableScan")) >= 2,
         s"both the total and the probe must read the cached per-source table:\n$p")
-      val plain = df.queryExecution.executedPlan.collectLeaves()
+      val plain = s.plan.queryExecution.executedPlan.collectLeaves()
         .count(l => !l.toString().contains("InMemoryTableScan"))
       assert(plain == 0,
         s"the tokenize scan must run once, inside the cached aggregate:\n$p")
       assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
         s"the 1-row total must re-enter by broadcast:\n$p")
-    } finally bySource.unpersist()
+    } finally s.release()
   }
 
   test("x87: one cached (source, term) count table feeds all three references") {
-    val (df, st) = graft.ops.TrainingOps.sourceKlDivergencePlan(
+    val s = graft.ops.TrainingOps.sourceKlDivergencePlan(
       spark.read.parquet(s"$sfDir/documents.parquet"))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.linesIterator.count(_.contains("InMemoryTableScan")) >= 3,
         s"term counts, source totals, and probe must all read the cache:\n$p")
-      val plain = df.queryExecution.executedPlan.collectLeaves()
+      val plain = s.plan.queryExecution.executedPlan.collectLeaves()
         .count(l => !l.toString().contains("InMemoryTableScan"))
       assert(plain == 0,
         s"the tokenize scan must run once, inside the cached count table:\n$p")
-    } finally st.unpersist()
+    } finally s.release()
   }
 
   test("x88: one cached distinct (source, term) table feeds the sizes and both self-join sides") {
-    val (df, st) = graft.ops.TrainingOps.sourceOverlapPlan(
+    val s = graft.ops.TrainingOps.sourceOverlapPlan(
       spark.read.parquet(s"$sfDir/documents.parquet"))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.linesIterator.count(_.contains("InMemoryTableScan")) >= 3,
         s"sizes and both self-join sides must read the cache:\n$p")
-      val plain = df.queryExecution.executedPlan.collectLeaves()
+      val plain = s.plan.queryExecution.executedPlan.collectLeaves()
         .count(l => !l.toString().contains("InMemoryTableScan"))
       assert(plain == 0,
         s"the tokenize+distinct must run once, inside the cache:\n$p")
-    } finally st.unpersist()
+    } finally s.release()
   }
 
   test("x22/x23: as-of and range joins are equi-joins, never nested loops") {
@@ -650,22 +650,22 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val (plan, bGrams) = graft.ops.TrainingOps.decontaminateBloomPlan(docs, bench)
+      val s = graft.ops.TrainingOps.decontaminateBloomPlan(docs, bench)
       try {
-        val p = plan.queryExecution.executedPlan.toString()
+        val p = s.plan.queryExecution.executedPlan.toString()
         assert(p.contains("might_contain"),
           s"expected the native Bloom probe on the corpus gram side:\n$p")
         assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
           s"verify join must stay an equi-join:\n$p")
         assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
           s"with broadcast off the verify join must shuffle:\n$p")
-        val got = plan.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val got = s.plan.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         val exact = graft.ops.TrainingOps.decontaminate(docs, bench)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(got == exact,
           s"Bloom variant must be exact: extra=${(got -- exact).take(3)} missing=${(exact -- got).take(3)}")
         assert(exact.nonEmpty, "decontamination fixture must produce hits")
-      } finally bGrams.unpersist()
+      } finally s.release()
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -682,31 +682,31 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("x95: per-anchor top-k pushes a partial group limit; buckets equi-join off one cache") {
-    val (df, caches) = graft.ops.TrainingOps.hardNegativesPlan(
+    val s = graft.ops.TrainingOps.hardNegativesPlan(
       spark.read.parquet(s"$sfDir/embeddings.parquet"))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(p.linesIterator.count(_.contains("WindowGroupLimit")) >= 2,
         s"rk<=k must push a partial per-partition group limit:\n$p")
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"bucket candidates must come from an equi-join:\n$p")
       assert(p.contains("InMemoryTableScan"),
         s"both bucket-join sides must read the one cached key table:\n$p")
-    } finally caches.foreach(_.unpersist())
+    } finally s.release()
   }
 
   test("x94: decontamination candidates are corpus x bench band pairs, never a corpus self-join") {
-    val (df, caches) = graft.ops.TrainingOps.semanticDecontaminatePlan(
+    val s = graft.ops.TrainingOps.semanticDecontaminatePlan(
       SparkEntry.clusteredEmbeddings(spark, sfDir))
     try {
-      val p = df.queryExecution.executedPlan.toString()
+      val p = s.plan.queryExecution.executedPlan.toString()
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"band candidates must come from an equi-join:\n$p")
       assert(p.contains("pmod"),
         s"the bench/corpus periodic split must gate both band sides:\n$p")
       assert(p.contains("InMemoryTableScan"),
         s"both band sides must read the one cached signature table:\n$p")
-    } finally caches.foreach(_.unpersist())
+    } finally s.release()
   }
 
   test("x96: fence and stats aggregates re-enter by broadcast") {
@@ -843,5 +843,59 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(shingleHashes <= 5,
         s"per-shingle md5 chain inlined $shingleHashes times — barrier lost")
     } finally { refFp.unpersist(); base.unpersist(); buckets.unpersist() }
+  }
+
+  test("a job failing while a plan is built or materialized releases what it staged") {
+    // x30's pass 1, x39's sketch sizing and x110's bucket-occupancy
+    // count run jobs over their caches before the plan exists;
+    // Staged.materialize runs the result job.
+    // Each fails here on one poisoned row and must leave no cache behind
+    // (a caller that catches the failure keeps the session).
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graftshim.CacheProbe.cachedEntries
+    import graft.ops.TrainingOps
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val poisonId = docs.agg(min("doc_id")).head().getLong(0)
+    val poison = udf((id: Long, t: String) =>
+      if (id == poisonId) throw new IllegalStateException("poisoned row") else t)
+    val bad = docs.withColumn("text", poison(col("doc_id"), col("text")))
+    def persisted(): Int = spark.sparkContext.getPersistentRDDs.size
+    def assertReleased(what: String)(run: => Any): Unit = {
+      val before = persisted()
+      val cachedBefore = cachedEntries(spark)
+      intercept[Exception](run)
+      // a cache whose build job failed holds no blocks but stays cached
+      assert(cachedEntries(spark) == cachedBefore,
+        s"$what: ${cachedEntries(spark) - cachedBefore} cached frames left after the failed job")
+      // poll: the failed checkpoint's own RDD goes with ContextCleaner GC
+      val deadline = System.nanoTime() + 10000000000L
+      while (persisted() > before && System.nanoTime() < deadline) {
+        System.gc(); Thread.sleep(100)
+      }
+      assert(persisted() <= before,
+        s"$what: ${persisted() - before} persisted RDDs left after the failed job")
+    }
+    assertReleased("packSequences")(TrainingOps.packSequences(bad))
+    assertReleased("decontaminateBloom")(TrainingOps.decontaminateBloom(docs, bad))
+    // the poisoned row (the smallest doc_id, 0 mod 13) is on the reference side
+    assertReleased("ingestCurate")(TrainingOps.ingestCurate(bad))
+    assertReleased("Staged.materialize")(
+      TrainingOps.Staged.persisted(bad).map(_.select("doc_id", "text")).materialize())
+  }
+
+  test("DumpPlans.lazyPlans: every entry's release frees every cache and checkpoint it made") {
+    import org.apache.spark.sql.graftshim.CacheProbe.cachedEntries
+    val sc = spark.sparkContext
+    for (p <- graft.tools.DumpPlans.lazyPlans(spark, sfDir)) {
+      val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+      val cachedBefore = cachedEntries(spark)
+      val staged = p.build()
+      try assert(staged.plan.queryExecution.executedPlan.toString().nonEmpty)
+      finally staged.release()
+      val left = sc.getPersistentRDDs.keySet.toSet -- rddsBefore
+      assert(left.isEmpty, s"${p.queries.head}: ${left.size} persisted RDDs left after release")
+      assert(cachedEntries(spark) == cachedBefore,
+        s"${p.queries.head}: ${cachedEntries(spark) - cachedBefore} cached frames left after release")
+    }
   }
 }
