@@ -22,6 +22,12 @@ object TrainingOps {
   def portableHash(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast(LongType)
 
+  /** The k-char shingle sequence of a normalized text column `n` (the
+    * whole text as one shingle when it is shorter than k). */
+  private def shingles(n: Column, k: Int): Column =
+    transform(sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
+      i => substring(n, i.cast("int"), lit(k)))
+
   /** Round-robin the input (hash it on `hashKeys` when given) to the
     * session's full parallelism BEFORE a compute-heavy per-row stage
     * (gram generate + per-gram md5, typed extraction): a small
@@ -101,16 +107,11 @@ object TrainingOps {
     * signature (a min-wise sketch using lexicographic order — no hash
     * function needed, portable to any SQL engine). Docs sharing the
     * signature are near-dup candidates. */
-  def ngramSignature(docs: DataFrame, k: Int = 5, bottomK: Int = 4): DataFrame = {
-    val n = normText(col("text"))
-    val sh = transform(
-      sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
-      i => substring(n, i.cast("int"), lit(k)))
+  def ngramSignature(docs: DataFrame, k: Int = 5, bottomK: Int = 4): DataFrame =
     spreadInput(docs).select(
       col("doc_id"),
-      concat_ws("|", slice(array_sort(array_distinct(sh)), 1, bottomK)).as("sig"))
+      concat_ws("|", slice(array_sort(shingleSetCol(col("text"), k)), 1, bottomK)).as("sig"))
       .orderBy("doc_id")
-  }
 
   /** MinHash signatures with an explicit affine hash family over the
     * portable shingle hash: h_i(x) = (a_i * x + b_i) mod P. Banded into
@@ -122,14 +123,8 @@ object TrainingOps {
   /** The distinct-shingle md5-hash array of [[minhashSignatures]] /
     * [[minhashBuckets]] as one expression — the single source both the
     * prunable signature projection and the barriered bucket path share. */
-  private def minhashShingleInts(k: Int): Column = {
-    val n = normText(col("text"))
-    val sh = transform(
-      sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
-      i => substring(n, i.cast("int"), lit(k)))
-    transform(array_distinct(sh),
-      s => conv(substring(md5(s), 1, 8), 16, 10).cast(LongType))
-  }
+  private def minhashShingleInts(k: Int): Column =
+    transform(shingleSetCol(col("text"), k), portableHash(_))
 
   private def minhashCols(hl: Column): Seq[Column] = MinhashA.indices.map { i =>
     array_min(transform(hl,
@@ -203,11 +198,29 @@ object TrainingOps {
     // eviction pressure (round-2 VERDICT "What's wrong" #2).
     jaccardNearDupPairsPlan(docs, threshold, k).materialize()
 
-  /** The lazy plan + its cached signature table, for plan assertions
-    * (PlanQualitySpec) and for callers that manage the cache themselves. */
-  /** The persisted (doc_id, sh, hl) shingle/hash table every minhash
-    * near-dup pipeline starts from (x13 self-join, x59 edit verify,
-    * x64 cross-corpus). Spreads the input BEFORE the shingle/md5 stage:
+  // --- the LSH candidate core ---------------------------------------------
+  // Every near-dup operator turns documents into band candidates here: a
+  // minhash base from [[repBase]] or a sign-LSH band table from
+  // [[embeddingBands]], then the one band join [[bandPairs]]; minhash
+  // candidates verify with [[jaccard]] (x59 with edit distance).
+
+  /** The distinct k-gram shingle set of a text column — the row-level
+    * expression [[shingleBase]] materializes and the x110 streaming
+    * gate computes per arriving row (one source, no drift). */
+  private def shingleSetCol(text: Column, k: Int): Column =
+    array_distinct(shingles(normText(text), k))
+
+  /** Exact Jaccard similarity of two shingle sets, rounded to 4 places —
+    * the one verify measure of the minhash family (x13, x64, x110). */
+  private def jaccard(a: Column, b: Column): Column =
+    round(size(array_intersect(a, b)).cast(DoubleType) / size(array_union(a, b)), 4)
+
+  /** The persisted (doc_id, <verify>, bk0, bk1) table every minhash
+    * near-dup pipeline bands from. `verify` names the column its pairs
+    * are verified on: "sh", the distinct shingle set (x13, x64, x72,
+    * x110), or "norm", the normalized text (x59's edit distance — its
+    * cache then holds no shingle array). Spreads the input BEFORE the
+    * shingle/md5 stage:
     * a small documents table is a single parquet split, so without this
     * the whole 10M-md5 signature computation runs in ONE task (measured
     * 16 s of x13's 18 s at sf0.1; the round-2 bench hid it behind the
@@ -220,23 +233,9 @@ object TrainingOps {
     * recomputations per doc (measured 209 s at sf0.1 vs ~2 s with the
     * boundary; higher-order functions are not codegen'd). At 100 TB
     * this boundary is a written signature table. Caller unpersists. */
-  /** The distinct k-gram shingle set of a text column — the row-level
-    * expression [[shingleBase]] materializes and the x110 streaming
-    * gate computes per arriving row (one source, no drift). */
-  private def shingleSetCol(text: Column, k: Int): Column = {
-    val n = normText(text)
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
-      i => substring(n, i.cast("int"), lit(k))))
-  }
-
-  /** Portable 32-bit hashes of a shingle array. */
-  private def shingleHashCol(sh: Column): Column =
-    transform(sh, s => conv(substring(md5(s), 1, 8), 16, 10).cast(LongType))
-
-  private def shingleBase(docs: DataFrame, k: Int): DataFrame = {
+  private def shingleBase(docs: DataFrame, k: Int, verify: String = "sh"): DataFrame = {
     // hash on doc_id (see spreadInput): the cached table keeps hash(doc_id)
-    // partitioning, so the candidate shingle-attach joins keyed on the id
+    // partitioning, so the candidate verify-column joins keyed on the id
     // read the cache without re-exchanging it
     val spread = spreadInput(docs, col("doc_id"))
     // The band keys are computed INTO the persisted table (every caller
@@ -247,21 +246,24 @@ object TrainingOps {
     // computed ONCE per row below the persist: CollapseProject would
     // otherwise re-inline the per-shingle md5 chain into all eight
     // minhash lambdas (the x13 209-s disease, the ingestKeyed idiom).
-    val enriched = spread.select(col("doc_id"),
-      explode(array(shingleSetCol(col("text"), k))).as("sh"))
-    val hashed = enriched.select(col("doc_id"), col("sh"),
-      explode(array(shingleHashCol(col("sh")))).as("hl"))
+    val hashed =
+      if (verify == "sh")
+        spread.select(col("doc_id"), explode(array(shingleSetCol(col("text"), k))).as("sh"))
+          .select(col("doc_id"), col("sh"),
+            explode(array(transform(col("sh"), portableHash(_)))).as("hl"))
+      else
+        spread.select(col("doc_id"), normText(col("text")).as(verify),
+          explode(array(transform(shingleSetCol(col("text"), k), portableHash(_)))).as("hl"))
     val (k0, k1) = bandKeyPair(col("hl"))
     // hl is consumed entirely by the key derivation — persisting only
-    // (doc_id, sh, bk0, bk1) keeps the hash array (the fattest column)
-    // out of the cache
-    hashed.select(col("doc_id"), col("sh"),
-        k0.as("bk0"), k1.as("bk1"))
+    // (doc_id, <verify>, bk0, bk1) keeps the hash array (the fattest
+    // column) out of the cache
+    hashed.select(col("doc_id"), col(verify), k0.as("bk0"), k1.as("bk1"))
       .persist()
   }
 
   /** The two 4-row minhash band keys of a shingle-hash array — shared
-    * by the [[bandKeys]] table build and the x110 per-row gate. */
+    * by the [[shingleBase]] build and the x110 per-row gate. */
   private def bandKeyPair(hl: Column): (Column, Column) = {
     val ms = JacA.indices.map { i =>
       array_min(transform(hl, x => pmod(x * JacA(i) + JacB(i), lit(JacP))))
@@ -278,6 +280,17 @@ object TrainingOps {
           struct(lit(0).as("band"), col("bk0").as("key")),
           struct(lit(1).as("band"), col("bk1").as("key")))).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
+
+  /** Distinct candidate pairs (`a`, `b`) from the (band, key) equi-join
+    * of two (`id`, band, key) tables — the one band join of every LSH
+    * near-dup operator. `self` is the one-table shape (the same table on
+    * both sides): one row per unordered pair, a < b. */
+  private def bandPairs(left: DataFrame, right: DataFrame, id: String,
+      a: String = "id_a", b: String = "id_b", self: Boolean = false): DataFrame = {
+    val joined = left.select(col("band"), col("key"), col(id).as(a))
+      .join(right.select(col("band"), col("key"), col(id).as(b)), Seq("band", "key"))
+    (if (self) joined.filter(col(a) < col(b)) else joined).select(a, b).distinct()
+  }
 
   /** Exact-duplicate membership (doc_id → normalized-text fingerprint)
     * and one representative (min doc_id) per group — the pre-collapse in
@@ -299,6 +312,34 @@ object TrainingOps {
     val reps = mem.groupBy("ek")
       .agg(min("doc_id").as("rep_id"), count(lit(1)).as("gsize"))
     (mem, reps)
+  }
+
+  /** A rep-level minhash band base: the [[shingleBase]] of one
+    * representative per exact group, the exact-group membership `mem`
+    * (doc_id, ek) and the representatives `reps` (ek, rep_id, gsize) —
+    * all three persisted, all freed by the one `release`. */
+  private final case class RepBase(base: DataFrame, mem: DataFrame, reps: DataFrame) {
+    val release: () => Unit = () => Seq(base, mem, reps).foreach(_.unpersist())
+
+    /** Distinct representative pairs (id_a < id_b) sharing a band bucket
+      * — the candidate frame x13 verifies and its telemetry counts. */
+    def selfPairs: DataFrame = {
+      val bands = bandKeys(base)
+      bandPairs(bands, bands, "doc_id", self = true)
+    }
+  }
+
+  /** The one minhash band-base builder (x13 and its composers, x59,
+    * x64, x72): the [[exactGroups]] pre-collapse, then the
+    * [[shingleBase]] of one representative per group. reps is persisted:
+    * the rep filter reads it, and so do the fan-out joins of x13/x59 and
+    * x64's stat attach, so the membership re-aggregation runs once (at
+    * 100 TB this is the written rep table every composer reuses). */
+  private def repBase(docs: DataFrame, k: Int, verify: String = "sh"): RepBase = {
+    val (mem, reps0) = exactGroups(docs)
+    val reps = reps0.persist()
+    val repDocs = docs.join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"))
+    RepBase(shingleBase(repDocs, k, verify), mem, reps)
   }
 
   /** All within-exact-group pairs (id_a < id_b) with the given constant
@@ -328,36 +369,15 @@ object TrainingOps {
         greatest(col("ma"), col("mb")).as("id_b") +: carry.map(col): _*)
   }
 
-  /** Rep-level band candidates + the tables behind them — ONE
-    * construction shared by the x13 plan and the candidate-count
-    * telemetry, so the "pre-collapse keeps candidates linear" spec
-    * measures exactly the join that ships. */
-  private def repBandCandidates(docs: DataFrame, k: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (mem, reps0) = exactGroups(docs)
-    // reps is referenced three times downstream (rep filter + the two
-    // ek-attach joins of expandRepPairs); persist so the membership
-    // re-aggregation runs once (sf0.1-neutral, but at 100 TB this is
-    // the written rep table every composer reuses). Caller releases.
-    val reps = reps0.persist()
-    val repDocs = docs.join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"))
-    val base = shingleBase(repDocs, k)
-    val bands = bandKeys(base)
-    val cands = bands.select(col("band"), col("key"), col("doc_id").as("id_a"))
-      .join(bands.select(col("band"), col("key"), col("doc_id").as("id_b")), Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    (cands, base, mem, reps)
-  }
-
+  /** x13's lazy plan staged with the release of its rep base — for plan
+    * assertions (PlanQualitySpec, DumpPlans) and the public operator. */
   private[graft] def jaccardNearDupPairsPlan(
       docs: DataFrame, threshold: Double = 0.8, k: Int = 9): Staged = {
-    val (verified, base, mem, reps) = jaccardPairsParts(docs, threshold, k)
+    val b = repBase(docs, k)
     // the deterministic-oracle sort belongs to the PUBLIC x13 surface
     // only — composers (components, canonical selection, curation)
     // consume the pairs order-free and skip a corpus-pair sort exchange
-    Staged(verified.orderBy("id_a", "id_b"),
-      () => Seq(base, mem, reps).foreach(_.unpersist()))
+    Staged(jaccardVerified(b, threshold).orderBy("id_a", "id_b"), b.release)
   }
 
   /** UNSORTED verified pairs, materialized and cache-released — the
@@ -366,49 +386,39 @@ object TrainingOps {
     * as x13, minus the presentation sort exchange. */
   private def jaccardPairsForCompose(docs: DataFrame, threshold: Double,
                                      k: Int = 9): DataFrame = {
-    val (verified, base, mem, reps) = jaccardPairsParts(docs, threshold, k)
-    Staged(verified.select("id_a", "id_b"),
-      () => Seq(base, mem, reps).foreach(_.unpersist())).materialize()
+    val b = repBase(docs, k)
+    Staged(jaccardVerified(b, threshold).select("id_a", "id_b"), b.release).materialize()
   }
 
-  /** The pair pipeline with its internals exposed — UNSORTED verified
-    * pairs plus the (persisted) shingle table and the exact-group
-    * membership/rep tables, so compositions (x104 curateCorpus) can
-    * reuse the SAME fingerprint tables for their exact-dedup columns
-    * instead of re-scanning the corpus through a second exactGroups.
-    * Caller unpersists base, mem and reps. */
-  private def jaccardPairsParts(
-      docs: DataFrame, threshold: Double, k: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (cands, base, mem, reps) = repBandCandidates(docs, k)
-    val shingleSets = base.select(col("doc_id"), col("sh"))
-    val repPairs = cands
+  /** The pair pipeline over a rep base: UNSORTED verified pairs, so
+    * compositions (x104 curateCorpus) can reuse the SAME fingerprint
+    * tables for their exact-dedup columns instead of re-scanning the
+    * corpus through a second exactGroups. */
+  private def jaccardVerified(b: RepBase, threshold: Double): DataFrame = {
+    val shingleSets = b.base.select(col("doc_id"), col("sh"))
+    val repPairs = b.selfPairs
       .join(shingleSets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(shingleSets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType)
-          / size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard"))
+      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
     // identical docs always co-band (identical signatures), so the old
     // full-corpus band join found every within-group pair at jaccard
     // exactly 1.0, and a cross pair (a∈A, b∈B) was a candidate iff the
     // groups' (identical-per-member) signatures share a band — the rep
     // pair's exact candidacy condition. Output is therefore IDENTICAL.
-    val verified = expandRepPairs(repPairs, reps, mem, Seq("jaccard"))
-      .unionByName(withinGroupPairs(mem, Seq(lit(1.0).as("jaccard"))))
-    (verified, base, mem, reps)
+    expandRepPairs(repPairs, b.reps, b.mem, Seq("jaccard"))
+      .unionByName(withinGroupPairs(b.mem, Seq(lit(1.0).as("jaccard"))))
   }
 
   /** Rep-level band-join candidate count at the x13 operating point —
     * telemetry for the pre-collapse: on m identical docs this is 0
     * (one rep, no pair), where the round-4 pipeline generated m²/2.
     * Counts the SAME candidate frame the x13 plan consumes
-    * ([[repBandCandidates]]), so the linear-candidates spec measures
+    * ([[RepBase.selfPairs]]), so the linear-candidates spec measures
     * the shipped join, not a parallel reconstruction. */
   private[graft] def jaccardBandCandidateCount(docs: DataFrame, k: Int = 9): Long = {
-    val (cands, base, mem, reps) = repBandCandidates(docs, k)
-    try cands.count()
-    finally { base.unpersist(); mem.unpersist(); reps.unpersist() }
+    val b = repBase(docs, k)
+    try b.selfPairs.count() finally b.release()
   }
 
   /** Duplicate components: connected components over the near-dup pair
@@ -1107,10 +1117,6 @@ object TrainingOps {
     * of `w` consecutive k-gram hashes each contribute their minimum;
     * the distinct sorted minima form the fingerprint set. */
   def winnowFingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame = {
-    val n = normText(col("text"))
-    val grams = transform(
-      sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
-      i => substring(n, i.cast("int"), lit(k)))
     // Materialize the gram-hash array as a NAMED column referenced twice
     // downstream: inlining it into the window lambda would re-evaluate
     // the whole md5 array per window element (O(n^2) md5 calls —
@@ -1118,7 +1124,7 @@ object TrainingOps {
     // keeps CollapseProject from re-inlining the expensive alias.
     val withHashes = docs.select(
       col("doc_id"),
-      transform(grams, g => conv(substring(md5(g), 1, 8), 16, 10).cast(LongType)).as("hashes"))
+      transform(shingles(normText(col("text")), k), portableHash(_)).as("hashes"))
     val h = col("hashes")
     val windowMins = transform(
       sequence(lit(0), greatest(size(h) - w, lit(0))),
@@ -1544,31 +1550,31 @@ object TrainingOps {
 
   private[graft] def embeddingNearDupPairsPlan(
       embeddings: DataFrame, threshold: Double = 0.9,
-      bits: Int = 48, nBands: Int = 4): Staged = {
+      bits: Int = 48, nBands: Int = 4): Staged =
+    embeddingBands(embeddings, bits, nBands).map { banded =>
+      val emb = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      bandPairs(banded, banded, "vec_id", self = true)
+        .join(emb.select(col("vec_id").as("id_a"), col("v").as("va")), Seq("id_a"))
+        .join(emb.select(col("vec_id").as("id_b"), col("v").as("vb")), Seq("id_b"))
+        .select(col("id_a"), col("id_b"),
+          round(cosine(col("va"), col("vb")), 3).as("sim"))
+        .filter(col("sim") >= threshold)
+        .orderBy("id_a", "id_b")
+    }
+
+  /** The persisted (vec_id, band, key) table of `nBands` slices of the
+    * `bits`-bit sign signature — the one band base of the embedding
+    * near-dup operators (x34, x94): both band-join sides read one
+    * computation of the 48-plane projection. */
+  private def embeddingBands(embeddings: DataFrame, bits: Int, nBands: Int): Staged = {
     require(bits % nBands == 0, s"bits=$bits must split into $nBands bands")
     val bandBits = bits / nBands
     val bandMask = (1L << bandBits) - 1
-    val sigs = embeddingLshSignatures(embeddings, bits)
-    val banded = sigs.select(col("vec_id"),
+    Staged.persisted(embeddingLshSignatures(embeddings, bits).select(col("vec_id"),
       posexplode(array((0 until nBands).map { i =>
         call_function("shiftright", col("lsh_sig"), lit(i * bandBits))
           .bitwiseAND(bandMask)
-      }: _*)).as(Seq("band", "key")))
-      .persist()
-    val cands = banded.select(col("band"), col("key"), col("vec_id").as("id_a"))
-      .join(banded.select(col("band"), col("key"), col("vec_id").as("id_b")),
-        Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val emb = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val verified = cands
-      .join(emb.select(col("vec_id").as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(emb.select(col("vec_id").as("id_b"), col("v").as("vb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("va"), col("vb")), 3).as("sim"))
-      .filter(col("sim") >= threshold)
-      .orderBy("id_a", "id_b")
-    Staged(verified, () => banded.unpersist())
+      }: _*)).as(Seq("band", "key"))))
   }
 
   /** recall@k of the LSH ANN path vs brute force — same honesty metric
@@ -1897,16 +1903,12 @@ object TrainingOps {
     // (same fix as jaccardNearDupPairsPlan — the signature computation is
     // the expensive stage and must use the full parallelism).
     val spread = spreadInput(docs, col("doc_id"))
-    val n = normText(col("text"))
-    val grams = transform(
-      sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
-      i => substring(n, i.cast("int"), lit(k)))
     // Named hash-array column: keeps CollapseProject from re-inlining the
     // md5 chain into the window-minima lambda (O(n^2) md5 otherwise —
     // same boundary winnowFingerprints needs).
     val withHashes = spread.select(
       col("doc_id"),
-      transform(grams, g => conv(substring(md5(g), 1, 8), 16, 10).cast(LongType)).as("hashes"))
+      transform(shingles(normText(col("text")), k), portableHash(_)).as("hashes"))
     val h = col("hashes")
     val windowMins = transform(
       sequence(lit(0), greatest(size(h) - w, lit(0))),
@@ -2598,35 +2600,11 @@ object TrainingOps {
     // default) — an empty payload has no edit-distance neighborhood.
     val nonEmpty = docs.filter(length(nrm) > 0)
     // exact-dup pre-collapse, the x13 convention: identical norms need
-    // no DP (lev = 0, sim = 1 by definition) and band only once; reps
-    // persisted — referenced by the rep filter and both expand joins
-    val (mem, reps0) = exactGroups(nonEmpty)
-    val reps = reps0.persist()
-    val spread = spreadInput(
-      nonEmpty.join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id")), col("doc_id"))
-    val sh = transform(
-      sequence(lit(1), greatest(length(nrm) - (k - 1), lit(1))),
-      i => substring(nrm, i.cast("int"), lit(k)))
-    // one materialization boundary after the md5 hash array (the x13
-    // CollapseProject lesson: interpreted HOF lambdas re-inline into
-    // every minhash column and join branch without it); band keys are
-    // precomputed into the persisted base behind a Generate barrier —
-    // the shingleBase convention, same rationale
-    val hashed = spread
-      .select(col("doc_id"), nrm.as("norm"),
-        explode(array(transform(array_distinct(sh),
-          s => conv(substring(md5(s), 1, 8), 16, 10).cast(LongType)))).as("hl"))
-    val (ek0, ek1) = bandKeyPair(col("hl"))
-    val base = hashed
-      .select(col("doc_id"), col("norm"), ek0.as("bk0"), ek1.as("bk1"))
-      .persist()
-    val bands = bandKeys(base)
-    val cands = bands.select(col("band"), col("key"), col("doc_id").as("id_a"))
-      .join(bands.select(col("band"), col("key"), col("doc_id").as("id_b")), Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val texts = base.select(col("doc_id"), col("norm"))
-    val repPairs = cands
+    // no DP (lev = 0, sim = 1 by definition) and band only once; the
+    // persisted base holds the norm text the DP verifies on
+    val b = repBase(nonEmpty, k, "norm")
+    val texts = b.base.select(col("doc_id"), col("norm"))
+    val repPairs = b.selfPairs
       .join(texts.select(col("doc_id").as("id_a"), col("norm").as("t_a")), Seq("id_a"))
       .join(texts.select(col("doc_id").as("id_b"), col("norm").as("t_b")), Seq("id_b"))
       // name the distance ONCE: codegen subexpression elimination usually
@@ -2640,11 +2618,11 @@ object TrainingOps {
           / greatest(length(col("t_a")), length(col("t_b"))).cast(DoubleType), 4)
           .as("sim"))
       .filter(col("sim") >= threshold)
-    val verified = expandRepPairs(repPairs, reps, mem, Seq("lev", "sim"))
-      .unionByName(withinGroupPairs(mem,
+    val verified = expandRepPairs(repPairs, b.reps, b.mem, Seq("lev", "sim"))
+      .unionByName(withinGroupPairs(b.mem,
         Seq(lit(0L).as("lev"), lit(1.0).as("sim"))))
       .orderBy("id_a", "id_b")
-    Staged(verified, () => Seq(base, mem, reps).foreach(_.unpersist()))
+    Staged(verified, b.release)
   }
 
   /** Sharded inverted-index build — the retrieval-side artifact a
@@ -2808,26 +2786,12 @@ object TrainingOps {
     // join runs rep×rep; a matched ref GROUP contributes its full size to
     // n_matches (identical ref docs are each a match), and corpus-rep
     // stats fan back out to every member by the membership join below
-    val (cmem, creps0) = exactGroups(corpus)
-    val (rmem, rreps0) = exactGroups(ref)
-    // each rep table is referenced twice (rep filter + stat attach):
-    // persist so the membership re-aggregation runs once per side
-    val creps = creps0.persist()
-    val rreps = rreps0.persist()
-    val cb = shingleBase(
-      corpus.join(creps.select(col("rep_id").as("doc_id")), Seq("doc_id")), k)
-    val rb = shingleBase(
-      ref.join(rreps.select(col("rep_id").as("doc_id")), Seq("doc_id")), k)
-    val cands = bandKeys(cb).select(col("band"), col("key"), col("doc_id").as("c_id"))
-      .join(bandKeys(rb).select(col("band"), col("key"), col("doc_id").as("r_id")),
-        Seq("band", "key"))
-      .select("c_id", "r_id").distinct()
-    val verified = cands
-      .join(cb.select(col("doc_id").as("c_id"), col("sh").as("sh_c")), Seq("c_id"))
-      .join(rb.select(col("doc_id").as("r_id"), col("sh").as("sh_r")), Seq("r_id"))
-      .select(col("c_id"), col("r_id"),
-        round(size(array_intersect(col("sh_c"), col("sh_r"))).cast(DoubleType)
-          / size(array_union(col("sh_c"), col("sh_r"))), 4).as("jaccard"))
+    val c = repBase(corpus, k)
+    val r = repBase(ref, k)
+    val verified = bandPairs(bandKeys(c.base), bandKeys(r.base), "doc_id", "c_id", "r_id")
+      .join(c.base.select(col("doc_id").as("c_id"), col("sh").as("sh_c")), Seq("c_id"))
+      .join(r.base.select(col("doc_id").as("r_id"), col("sh").as("sh_r")), Seq("r_id"))
+      .select(col("c_id"), col("r_id"), jaccard(col("sh_c"), col("sh_r")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
     // best match = THE reference doc that produced the best similarity
     // (one struct-max: max jaccard, ties to the smallest r_id via the
@@ -2837,7 +2801,7 @@ object TrainingOps {
     // a matched group is its min — the rep id itself — so the rep-level
     // struct-max equals the round-4 member-level one exactly.
     val hits = verified
-      .join(rreps.select(col("rep_id").as("r_id"), col("gsize")), Seq("r_id"))
+      .join(r.reps.select(col("rep_id").as("r_id"), col("gsize")), Seq("r_id"))
       .groupBy(col("c_id")).agg(
         sum("gsize").as("n_matches"),
         max(struct(col("jaccard").as("j"), (-col("r_id")).as("nr"))).as("b"))
@@ -2845,16 +2809,16 @@ object TrainingOps {
         col("b.j").as("best_jaccard"), (-col("b.nr")).as("best_match"))
     // fan corpus-rep stats out to every member of the rep's exact group
     val hitsByEk = hits
-      .join(creps.select(col("rep_id").as("c_id"), col("ek")), Seq("c_id"))
+      .join(c.reps.select(col("rep_id").as("c_id"), col("ek")), Seq("c_id"))
       .select(col("ek"), col("n_matches"), col("best_jaccard"), col("best_match"))
-    val out = cmem
+    val out = c.mem
       .join(hitsByEk, Seq("ek"), "left")
       .select(col("doc_id"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         col("best_match"), col("best_jaccard"),
         when(col("n_matches").isNull, 1L).otherwise(0L).as("keep"))
       .orderBy("doc_id")
-    Staged(out, () => Seq(cb, rb, cmem, rmem, creps, rreps).foreach(_.unpersist()))
+    Staged(out, () => { c.release(); r.release() })
   }
 
   /** Top-V vocabulary truncation + per-doc out-of-vocabulary rate — the
@@ -3007,16 +2971,13 @@ object TrainingOps {
     * Two map-side-combinable aggregations, no joins past the band
     * build. */
   def bandOccupancy(docs: DataFrame, k: Int = 9): DataFrame = {
-    val (mem, reps) = exactGroups(docs)
-    val base = shingleBase(
-      docs.join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id")), k)
-    Staged(bandKeys(base)
+    val b = repBase(docs, k)
+    Staged(bandKeys(b.base)
       .groupBy("band", "key").agg(count(lit(1)).as("bucket_size"))
       .groupBy("band", "bucket_size").agg(count(lit(1)).as("n_buckets"))
       .select(col("band").cast(LongType).as("band"),
         col("bucket_size"), col("n_buckets"))
-      .orderBy("band", "bucket_size"),
-      () => { base.unpersist(); mem.unpersist() }).materialize()
+      .orderBy("band", "bucket_size"), b.release).materialize()
   }
 
   /** Corpus datasheet — the one-row "datasheet for datasets" card
@@ -3746,9 +3707,8 @@ object TrainingOps {
         .select(col("doc_id"),
           coalesce(col("comp"), col("doc_id")).as("component"))
         .select(col("doc_id"), col("component"),
-          when(conv(substring(md5(concat(lit("split:"),
-              col("component").cast("string"))), 1, 8), 16, 10)
-              .cast(LongType) % valFolds === 0L, "val")
+          when(portableHash(concat(lit("split:"),
+              col("component").cast("string"))) % valFolds === 0L, "val")
             .otherwise("train").as("split"))
         .orderBy("doc_id")
     }.materialize()
@@ -3880,38 +3840,22 @@ object TrainingOps {
   /** Lazy plan + the banded-signature cache both join sides read. */
   private[graft] def semanticDecontaminatePlan(
       embeddings: DataFrame, benchMod: Long = 50L, threshold: Double = 0.9,
-      bits: Int = 48, nBands: Int = 4): Staged = {
-    require(bits % nBands == 0, s"bits=$bits must split into $nBands bands")
-    val bandBits = bits / nBands
-    val bandMask = (1L << bandBits) - 1
-    val banded = embeddingLshSignatures(embeddings, bits)
-      .select(col("vec_id"),
-        posexplode(array((0 until nBands).map { i =>
-          call_function("shiftright", col("lsh_sig"), lit(i * bandBits))
-            .bitwiseAND(bandMask)
-        }: _*)).as(Seq("band", "key")))
-      .persist()
-    val isBench = pmod(col("vec_id"), lit(benchMod)) === 0L
-    val cands = banded.filter(!isBench)
-      .select(col("band"), col("key"), col("vec_id").as("c_id"))
-      .join(banded.filter(isBench)
-        .select(col("band"), col("key"), col("vec_id").as("b_id")),
-        Seq("band", "key"))
-      .select("c_id", "b_id").distinct()
-    val emb = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val out = cands
-      .join(emb.select(col("vec_id").as("c_id"), col("v").as("vc")), Seq("c_id"))
-      .join(emb.select(col("vec_id").as("b_id"), col("v").as("vb")), Seq("b_id"))
-      .select(col("c_id"), col("b_id"),
-        round(cosine(col("vc"), col("vb")), 3).as("sim"))
-      .filter(col("sim") >= threshold)
-      .groupBy("c_id").agg(count(lit(1)).as("n_hits"),
-        max(struct(col("sim").as("s"), (-col("b_id")).as("nb"))).as("m"))
-      .select(col("c_id").as("vec_id"), col("n_hits"),
-        col("m.s").as("best_sim"), (-col("m.nb")).as("best_bench"))
-      .orderBy("vec_id")
-    Staged(out, () => banded.unpersist())
-  }
+      bits: Int = 48, nBands: Int = 4): Staged =
+    embeddingBands(embeddings, bits, nBands).map { banded =>
+      val isBench = pmod(col("vec_id"), lit(benchMod)) === 0L
+      val emb = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      bandPairs(banded.filter(!isBench), banded.filter(isBench), "vec_id", "c_id", "b_id")
+        .join(emb.select(col("vec_id").as("c_id"), col("v").as("vc")), Seq("c_id"))
+        .join(emb.select(col("vec_id").as("b_id"), col("v").as("vb")), Seq("b_id"))
+        .select(col("c_id"), col("b_id"),
+          round(cosine(col("vc"), col("vb")), 3).as("sim"))
+        .filter(col("sim") >= threshold)
+        .groupBy("c_id").agg(count(lit(1)).as("n_hits"),
+          max(struct(col("sim").as("s"), (-col("b_id")).as("nb"))).as("m"))
+        .select(col("c_id").as("vec_id"), col("n_hits"),
+          col("m.s").as("best_sim"), (-col("m.nb")).as("best_bench"))
+        .orderBy("vec_id")
+    }
 
   /** Hard-negative mining for retrieval training: per anchor, the
     * top-k most-similar NON-duplicate neighbors inside a coarse LSH
@@ -4054,9 +3998,8 @@ object TrainingOps {
     docs.select(col("doc_id"),
         explode(sequence(lit(0L), lit((epochs - 1).toLong))).as("epoch"))
       .select(col("doc_id"), col("epoch"),
-        conv(substring(md5(concat(lit("ep:"), col("epoch").cast("string"),
-          lit(":"), col("doc_id").cast("string"))), 1, 8), 16, 10)
-          .cast(LongType).as("skey"))
+        portableHash(concat(lit("ep:"), col("epoch").cast("string"),
+          lit(":"), col("doc_id").cast("string"))).as("skey"))
       .select(col("doc_id"), col("epoch"),
         pmod(col("skey"), lit(shards.toLong)).as("shard"), col("skey"))
       .orderBy("epoch", "doc_id")
@@ -4328,15 +4271,16 @@ object TrainingOps {
     // ONE exactGroups pass feeds both the band pre-collapse and the
     // keep_exact column (the pair machinery already computes exactly the
     // membership/rep tables the exact flag needs — review r5 finding)
-    val (pairsPlan, base, mem, reps) = jaccardPairsParts(docs, threshold, 9)
-    val releaseExact: () => Unit = () => { mem.unpersist(); reps.unpersist() }
-    val (members, _) = releaseOnFailure(releaseExact) {
-      // shingles done once the pairs materialize; mem feeds the flag below
+    val b = repBase(docs, 9)
+    val (members, _) = releaseOnFailure(b.release) {
+      // the shingle table is done once the pairs materialize (drop it
+      // before the star loop); mem and reps feed the flag below
       connectedComponentsStarMembersWithRounds(
-        Staged(pairsPlan.select("id_a", "id_b"), () => base.unpersist()).materialize())
+        Staged(jaccardVerified(b, threshold).select("id_a", "id_b"),
+          () => b.base.unpersist()).materialize())
     }
-    Staged(members.plan, () => { members.release(); releaseExact() }).map { labels =>
-      val keepExact = mem.join(reps, Seq("ek"))
+    Staged(members.plan, () => { members.release(); b.release() }).map { labels =>
+      val keepExact = b.mem.join(b.reps, Seq("ek"))
         .select(col("doc_id"),
           (col("doc_id") === col("rep_id")).cast(LongType).as("keep_exact"))
       val keepNear = labels
@@ -4540,15 +4484,6 @@ object TrainingOps {
       .limit(k)
   }
 
-  /** The reference-side tables of the x110 ingest gate, built ONCE and
-    * persisted (at 100 TB: written tables the ingest job broadcasts or
-    * joins against): the distinct normalized-text fingerprint set, the
-    * (persisted) shingle table of one representative per distinct ref
-    * text, and the band-bucket table mapping each band key to the
-    * shingle sets it holds. Bucket arrays are bounded by LSH bucket
-    * occupancy (the quantity x72 measures) times the rep pre-collapse —
-    * duplicate ref texts contribute ONE set. Caller unpersists all
-    * three. */
   /** Bucket-occupancy cap for the BATCH ingest gate (VERDICT r05
     * what's-wrong #2): a (band, key) bucket holding more than this many
     * distinct ref reps leaves the per-row array path entirely and
@@ -4560,9 +4495,23 @@ object TrainingOps {
     * joining that key scans them all. */
   val IngestBucketCap = 16
 
+  /** The reference-side tables of the x110 ingest gate, built ONCE and
+    * persisted (at 100 TB: written tables the ingest job broadcasts or
+    * joins against): `fp`, the distinct normalized-text fingerprint set
+    * (ek, doc_id); `base`, the [[shingleBase]] of one representative per
+    * distinct ref text; `buckets`, the band-bucket table mapping each
+    * band key to the shingle sets it holds; and, when a bucket cap
+    * split them off, `hot`, the members of over-cap keys. Bucket arrays
+    * are bounded by LSH bucket occupancy (the quantity x72 measures)
+    * times the rep pre-collapse — duplicate ref texts contribute ONE
+    * set. `release` frees every one. */
+  private[graft] final case class IngestRef(fp: DataFrame, base: DataFrame,
+      buckets: DataFrame, hot: Option[DataFrame]) {
+    val release: () => Unit = () => (Seq(fp, base, buckets) ++ hot).foreach(_.unpersist())
+  }
+
   private[graft] def ingestRefTables(ref: DataFrame, k: Int = 9,
-      capN: Int = Int.MaxValue)
-      : (DataFrame, DataFrame, DataFrame, Option[DataFrame]) = {
+      capN: Int = Int.MaxValue): IngestRef = {
     // ONE md5 aggregate feeds both the fingerprint set and the rep
     // pick (the old shape scanned + hashed the ref corpus twice:
     // distinct for the fp set, then groupBy for the reps). refFp now
@@ -4579,7 +4528,7 @@ object TrainingOps {
     def fullBuckets() = members
       .groupBy("band", "key").agg(collect_list(col("sh")).as("shs"))
       .persist()
-    if (capN == Int.MaxValue) (refFp, base, fullBuckets(), None)
+    if (capN == Int.MaxValue) IngestRef(refFp, base, fullBuckets(), None)
     else {
       // occupancy is one map-side-combinable count (the x72 measurement);
       // the over-cap key set is tiny by construction (only hot keys) and
@@ -4590,29 +4539,18 @@ object TrainingOps {
         .filter(col("n") > capN).select("band", "key")
       // the occupancy count is a job over the persisted tables
       val nHot = releaseOnFailure(() => { refFp.unpersist(); base.unpersist() })(hot.count())
-      if (nHot == 0L) (refFp, base, fullBuckets(), None)
+      if (nHot == 0L) IngestRef(refFp, base, fullBuckets(), None)
       else {
         val buckets = members.join(broadcast(hot), Seq("band", "key"), "left_anti")
           .groupBy("band", "key").agg(collect_list(col("sh")).as("shs"))
           .persist()
         val hotMembers = members
           .join(broadcast(hot), Seq("band", "key"), "left_semi").persist()
-        (refFp, base, buckets, Some(hotMembers))
+        IngestRef(refFp, base, buckets, Some(hotMembers))
       }
     }
   }
 
-  /** The per-document ingest verdict — STATELESS by construction so the
-    * same plan runs batch and as a Structured Streaming append-mode
-    * query ([[graft.streaming.StreamingPipeline.streamIngestCurate]]):
-    * each row computes its fingerprint, shingle set, and its TWO band
-    * keys as plain columns (no explode, no aggregation), LEFT-joins the
-    * static fingerprint set (exact dup) and each band bucket (near-dup
-    * candidates), and decides near-dup with an `exists` over the
-    * candidate shingle sets at the same round(jaccard,4) ≥ t rule the
-    * x13/x64 family verifies with. Every arriving doc emits exactly one
-    * decided row — no update-mode aggregation, no watermark, no state
-    * store. */
   /** The per-row (doc_id, text, ek, sh, k0, k1) enrichment of the
     * ingest gate — shared by the stateless core and the batch
     * overflow-join path, so the md5 chain has ONE source.
@@ -4633,12 +4571,23 @@ object TrainingOps {
       .select(col("doc_id"), col("text"),
         col("e.ek").as("ek"), col("e.sh").as("sh"))
     val hashed = enriched.select(col("doc_id"), col("text"), col("ek"),
-        col("sh"), explode(array(shingleHashCol(col("sh")))).as("hl"))
+        col("sh"), explode(array(transform(col("sh"), portableHash(_)))).as("hl"))
     val (bk0, bk1) = bandKeyPair(col("hl"))
     hashed.select(col("doc_id"), col("text"), col("ek"),
       col("sh"), bk0.as("k0"), bk1.as("k1"))
   }
 
+  /** The per-document ingest verdict — STATELESS by construction so the
+    * same plan runs batch and as a Structured Streaming append-mode
+    * query ([[graft.streaming.StreamingPipeline.streamIngestCurate]]):
+    * each row computes its fingerprint, shingle set, and its TWO band
+    * keys as plain columns (no explode, no aggregation), LEFT-joins the
+    * static fingerprint set (exact dup) and each band bucket (near-dup
+    * candidates), and decides near-dup with an `exists` over the
+    * candidate shingle sets at the same round(jaccard,4) ≥ t rule the
+    * x13/x64 family verifies with. Every arriving doc emits exactly one
+    * decided row — no update-mode aggregation, no watermark, no state
+    * store. */
   private[graft] def ingestCurateCore(docs: DataFrame, refFp: DataFrame,
       buckets: DataFrame, threshold: Double, k: Int = 9): DataFrame =
     ingestVerdictCols(ingestKeyed(docs, k), refFp, buckets, threshold)
@@ -4654,9 +4603,7 @@ object TrainingOps {
     val emptyShs = array().cast("array<array<string>>")
     val cand = concat(coalesce(col("shs0"), emptyShs),
       coalesce(col("shs1"), emptyShs))
-    val nearDup = exists(cand, r =>
-      round(size(array_intersect(col("sh"), r)).cast(DoubleType)
-        / size(array_union(col("sh"), r)), 4) >= threshold)
+    val nearDup = exists(cand, r => jaccard(col("sh"), r) >= threshold)
     keyed
       .join(fp, Seq("ek"), "left")
       .join(b0, Seq("k0"), "left")
@@ -4697,23 +4644,19 @@ object TrainingOps {
     // ever built and the hot-key join is AQE-skew-splittable. When no
     // key exceeds the cap (the common case after the rep pre-collapse)
     // the plan is the pure array path, unchanged.
-    val (refFp, base, buckets, hotOpt) =
-      ingestRefTables(ref, 9, IngestBucketCap)
-    val releaseRef = () => Seq(refFp, base, buckets).foreach(_.unpersist())
-    hotOpt match {
+    val r = ingestRefTables(ref, 9, IngestBucketCap)
+    r.hot match {
       case None =>
-        Staged(ingestCurateCore(corpus, refFp, buckets, threshold).orderBy("doc_id"),
-          releaseRef).materialize()
+        Staged(ingestCurateCore(corpus, r.fp, r.buckets, threshold).orderBy("doc_id"),
+          r.release).materialize()
       case Some(hotMembers) =>
         // keyed is consumed by the verdict joins AND the hot-key pair
         // join — persist so the per-row md5 chain runs once
         val keyed = ingestKeyed(corpus).persist()
-        Staged(keyed, () => { keyed.unpersist(); hotMembers.unpersist(); releaseRef() })
+        Staged(keyed, () => { keyed.unpersist(); r.release() })
           .map { keyed =>
-            val core = ingestVerdictCols(keyed, refFp, buckets, threshold)
-            def jaccHit = round(
-              size(array_intersect(col("sh"), col("rsh"))).cast(DoubleType)
-                / size(array_union(col("sh"), col("rsh"))), 4) >= threshold
+            val core = ingestVerdictCols(keyed, r.fp, r.buckets, threshold)
+            def jaccHit = jaccard(col("sh"), col("rsh")) >= threshold
             val h0 = hotMembers.filter(col("band") === 0)
               .select(col("key").as("k0"), col("sh").as("rsh"))
             val h1 = hotMembers.filter(col("band") === 1)

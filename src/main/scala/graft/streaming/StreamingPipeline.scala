@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Extractor
 import graft.model.{ExtractionResult, Turn}
+import graft.ops.TrainingOps
+import TrainingOps.Staged
 
 /** Structured Streaming variant of the extraction pipeline
   * (SURVEY.md §2.10).
@@ -16,6 +18,12 @@ import graft.model.{ExtractionResult, Turn}
   * map to a `flatMapGroupsWithState` keyed by payload kind; its
   * stale-task sweep (routes.py:1198-1217) maps to state TTL via
   * ProcessingTimeTimeout.
+  *
+  * The stream-static twins (decontamination, anomaly fences, calibrated
+  * scores, ingest curation) persist their static side once and return
+  * it with the stream plan as a [[Staged]]: start `plan.writeStream`,
+  * and call `release()` after `q.stop()` (a streaming plan cannot be
+  * `materialize`d).
   */
 object StreamingPipeline {
 
@@ -36,7 +44,7 @@ object StreamingPipeline {
   def streamDedup(turns: Dataset[Turn], watermark: String = "10 minutes"): Dataset[Turn] = {
     import turns.sparkSession.implicits._
     turns
-      .withColumn("fp", md5(graft.ops.TrainingOps.normText(col("text"))))
+      .withColumn("fp", md5(TrainingOps.normText(col("text"))))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("fp")
       .drop("fp")
@@ -56,16 +64,13 @@ object StreamingPipeline {
     * aggregation state with a watermark on an event-time column (the
     * streamDedup contract); the gram set side scales by swapping the
     * broadcast for the x39 Bloom-literal prefilter, identical plan
-    * options to batch. */
+    * options to batch. The static side of a stream-static join
+    * re-evaluates per trigger, so the gram set is persisted once for
+    * the life of the query. */
   def streamDecontaminate(docs: DataFrame, benchmark: DataFrame,
-                          n: Int = 13): DataFrame = {
-    // the static side of a stream-static join re-evaluates per trigger;
-    // persist the gram set once so micro-batches reuse it (the cache
-    // lives as long as the streaming query — intended; a caller that
-    // stops the stream can sweep it via spark.catalog.clearCache())
-    val bGrams = graft.ops.TrainingOps.benchmarkGrams(benchmark, n).persist()
-    graft.ops.TrainingOps.decontaminateCore(docs, bGrams, n)
-  }
+                          n: Int = 13): Staged =
+    Staged.persisted(TrainingOps.benchmarkGrams(benchmark, n))
+      .map(TrainingOps.decontaminateCore(docs, _, n))
 
   /** Streaming Tukey-fence anomaly gate — the live twin of the batch
     * x81 query: fences are computed ONCE over a HISTORICAL events batch
@@ -78,9 +83,35 @@ object StreamingPipeline {
     * to batch regardless of micro-batch boundaries (spec-pinned). The
     * fence table is persisted so triggers don't recompute the
     * historical percentiles (the streamDecontaminate convention). */
-  def streamEventAnomalies(events: DataFrame, historical: DataFrame): DataFrame = {
-    val fences = graft.ops.TrainingOps.eventFences(historical).persist()
-    graft.ops.TrainingOps.anomalyFlagsCore(events, fences)
+  def streamEventAnomalies(events: DataFrame, historical: DataFrame): Staged =
+    Staged.persisted(TrainingOps.eventFences(historical))
+      .map(TrainingOps.anomalyFlagsCore(events, _))
+
+  /** Streaming ingest-curation gate — the live twin of the batch x110
+    * query: the reference corpus's fingerprint set and band buckets are
+    * built ONCE ([[graft.ops.TrainingOps.ingestRefTables]], persisted
+    * for the life of the query — the streamDecontaminate convention),
+    * and every arriving document runs the SAME stateless
+    * [[graft.ops.TrainingOps.ingestCurateCore]] plan the batch query
+    * runs: per-row band keys, two stream-static bucket joins, an
+    * `exists` jaccard verify, and the Gopher pass — one decided APPEND
+    * row per doc, no state store, so the verdict stream is identical
+    * to batch across any micro-batch split (spec-pinned). */
+  def streamIngestCurate(docs: DataFrame, ref: DataFrame,
+                         threshold: Double = 0.8): Staged = {
+    // uncapped ref tables (capN default): the per-row exists path must
+    // see every bucket member — the batch gate's hot-key pair-join
+    // fallback needs a per-doc aggregation, which an append-mode stream
+    // cannot run; bucket growth is bounded by the ref-refresh cadence
+    val r = TrainingOps.ingestRefTables(ref)
+    Staged(r.fp, r.release).map { fp =>
+      // materialize both static caches eagerly, then drop the shingle
+      // table — it only feeds the bucket build and would otherwise stay
+      // persisted for the life of the query
+      r.buckets.count(); fp.count()
+      r.base.unpersist()
+      TrainingOps.ingestCurateCore(docs, fp, r.buckets, threshold)
+    }
   }
 
   /** Per-source winsorized z-scores for LIVE documents against a
@@ -93,47 +124,9 @@ object StreamingPipeline {
     * identical to batch across any micro-batch split, spec-pinned).
     * The calibration table is persisted so triggers don't recompute
     * the historical percentiles. */
-  /** Streaming ingest-curation gate — the live twin of the batch x110
-    * query: the reference corpus's fingerprint set and band buckets are
-    * built ONCE ([[graft.ops.TrainingOps.ingestRefTables]], persisted
-    * for the life of the query — the streamDecontaminate convention),
-    * and every arriving document runs the SAME stateless
-    * [[graft.ops.TrainingOps.ingestCurateCore]] plan the batch query
-    * runs: per-row band keys, two stream-static bucket joins, an
-    * `exists` jaccard verify, and the Gopher pass — one decided APPEND
-    * row per doc, no state store, so the verdict stream is identical
-    * to batch across any micro-batch split (spec-pinned). */
-  def streamIngestCurate(docs: DataFrame, ref: DataFrame,
-                         threshold: Double = 0.8): DataFrame =
-    streamIngestCurateWithCaches(docs, ref, threshold)._1
-
-  /** Same, returning the persisted static ref frames so a long-lived
-    * session can release them after `q.stop()` (ADVICE r05: the
-    * no-handle variant leaks one fingerprint + one bucket cache per
-    * started stream until eviction pressure — the jaccardNearDupPairs
-    * leak class). The (plan, caches) convention. */
-  def streamIngestCurateWithCaches(docs: DataFrame, ref: DataFrame,
-      threshold: Double = 0.8): (DataFrame, Seq[DataFrame]) = {
-    // uncapped ref tables (capN default): the per-row exists path must
-    // see every bucket member — the batch gate's hot-key pair-join
-    // fallback needs a per-doc aggregation, which an append-mode stream
-    // cannot run; bucket growth is bounded by the ref-refresh cadence
-    val (refFp, base, buckets, _) = graft.ops.TrainingOps.ingestRefTables(ref)
-    // materialize both static caches eagerly, then release the shingle
-    // table — it only feeds the bucket build and would otherwise stay
-    // persisted for the life of the query
-    buckets.count(); refFp.count()
-    base.unpersist()
-    (graft.ops.TrainingOps.ingestCurateCore(docs, refFp, buckets, threshold),
-      Seq(refFp, buckets))
-  }
-
-  def streamCalibratedScores(docs: DataFrame,
-                             historical: DataFrame): DataFrame = {
-    val calib = graft.ops.TrainingOps.calibrationStats(historical).persist()
-    graft.ops.TrainingOps.calibrateCore(
-      graft.ops.TrainingOps.scoreProjection(docs), calib)
-  }
+  def streamCalibratedScores(docs: DataFrame, historical: DataFrame): Staged =
+    Staged.persisted(TrainingOps.calibrationStats(historical))
+      .map(TrainingOps.calibrateCore(TrainingOps.scoreProjection(docs), _))
 
   /** One emitted near-duplicate match (canonical id order). */
   final case class NearDupPair(id_a: Long, id_b: Long, hamming: Int)
@@ -163,12 +156,12 @@ object StreamingPipeline {
     import docs.sparkSession.implicits._
     graft.GraftFunctions.register(docs.sparkSession)
     val nBands = 4
-    val bandBits = graft.ops.TrainingOps.SimhashBits / nBands // 15
+    val bandBits = TrainingOps.SimhashBits / nBands // 15
     val bandMask = (1L << bandBits) - 1
     val banded = docs.toDF("doc_id", "text")
       .select(col("doc_id"),
         call_function("simhash60",
-          graft.ops.TrainingOps.normText(col("text"))).as("sh"))
+          TrainingOps.normText(col("text"))).as("sh"))
       .select(col("doc_id"), col("sh"),
         explode(array((0 until nBands).map { i =>
           struct(lit(i).as("band"),

@@ -83,7 +83,7 @@ object DumpPlans {
     def section(title: String, note: String, plan: String): Unit = {
       sb.append(s"## $title\n\n")
       if (note.nonEmpty) sb.append(note + "\n\n")
-      sb.append("```\n").append(plan.take(6000)).append("\n```\n\n")
+      sb.append("```\n").append(plan).append("\n```\n\n")
     }
     for (n <- names) section(n, "", explain(graft.SparkEntry.queries(n)(spark, sfDir)))
     for (p <- lazyPlans(spark, sfDir))
@@ -248,9 +248,8 @@ object DumpPlans {
         () => {
           val corpus = docs.filter(pmod(col("doc_id"), lit(13L)) =!= 0)
           val ref = docs.filter(pmod(col("doc_id"), lit(13L)) === 0)
-          val (refFp, base, buckets, _) = TrainingOps.ingestRefTables(ref)
-          Staged(TrainingOps.ingestCurateCore(corpus, refFp, buckets, 0.8),
-            () => Seq(refFp, base, buckets).foreach(_.unpersist()))
+          val r = TrainingOps.ingestRefTables(ref)
+          Staged(TrainingOps.ingestCurateCore(corpus, r.fp, r.buckets, 0.8), r.release)
         }),
       LazyPlan(Seq("x14_dup_components"),
         "One min-label-propagation round over the persisted edge list\n" +

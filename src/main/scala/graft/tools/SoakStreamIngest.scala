@@ -46,10 +46,9 @@ object SoakStreamIngest {
     // a MemoryStream batch is ONE partition; a production source
     // (Kafka) arrives partitioned — repartition the stream here so the
     // soak measures the operator, not the test source's layout
-    val (plan, refCaches) =
-      graft.streaming.StreamingPipeline.streamIngestCurateWithCaches(
-        input.toDF().toDF("doc_id", "text").repartition(cores), ref)
-    val q = plan
+    val gate = graft.streaming.StreamingPipeline.streamIngestCurate(
+      input.toDF().toDF("doc_id", "text").repartition(cores), ref)
+    val q = gate.plan
       .writeStream.format("memory").queryName("soak_ingest")
       .outputMode(OutputMode.Append).start()
     val setupMs = (System.nanoTime() - t0) / 1e6
@@ -72,7 +71,7 @@ object SoakStreamIngest {
     val wall = (System.nanoTime() - t0) / 1e9
     val outRows = spark.sql("SELECT count(*) FROM soak_ingest").head().getLong(0)
     q.stop()
-    refCaches.foreach(_.unpersist()) // the (plan, caches) release contract
+    gate.release()
     val sorted = lat.sorted
     def pct(p: Double) = sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
     def f(d: Double) = f"$d%.1f".toDouble
@@ -86,8 +85,9 @@ object SoakStreamIngest {
     val hist = spark.read.parquet(s"$sfDir/documents.parquet")
     val cin = MemoryStream[(Long, String, String)]
     val tc0 = System.nanoTime()
-    val cq = graft.streaming.StreamingPipeline.streamCalibratedScores(
-        cin.toDF().toDF("doc_id", "text", "source"), hist)
+    val calib = graft.streaming.StreamingPipeline.streamCalibratedScores(
+      cin.toDF().toDF("doc_id", "text", "source"), hist)
+    val cq = calib.plan
       .writeStream.format("memory").queryName("soak_calib")
       .outputMode(OutputMode.Append).start()
     val poolS = docs.join(
@@ -111,6 +111,7 @@ object SoakStreamIngest {
     val cWall = (System.nanoTime() - tc0) / 1e9
     val cOut = spark.sql("SELECT count(*) FROM soak_calib").head().getLong(0)
     cq.stop()
+    calib.release()
     val cs = clat.sorted
     def cpct(p: Double) = cs(math.min(cs.length - 1, (p * cs.length).toInt))
     println(s"""{"soak":"stream_calibrated_scores","batches":$nBatches,"rows_per_batch":$perBatch,""" +

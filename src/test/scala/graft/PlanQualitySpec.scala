@@ -130,35 +130,43 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally s.release()
   }
 
-  test("x06/x13/x14: caches are released after the result materializes") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    def cachedRdds(): Int =
-      spark.sparkContext.getPersistentRDDs.size
-    // run each operator end-to-end; afterwards the only persistent RDDs
-    // allowed to remain are the (tiny, ContextCleaner-GC'd) localCheckpoint
-    // results — the big signature/band/edge caches must be gone. We assert
-    // by delta: each call may add at most its own small checkpoint blocks,
-    // not a monotonically growing cache (the round-2 leak re-ran Verify
-    // twice and hit "already cached" WARNs).
-    val before = cachedRdds()
-    graft.ops.TrainingOps.simhashNearDupPairs(docs).count()
-    graft.ops.TrainingOps.jaccardNearDupPairs(docs).count()
-    graft.ops.TrainingOps.dupComponents(docs).count()
-    val mid = cachedRdds()
-    graft.ops.TrainingOps.simhashNearDupPairs(docs).count()
-    graft.ops.TrainingOps.jaccardNearDupPairs(docs).count()
-    graft.ops.TrainingOps.dupComponents(docs).count()
+  /** Runs each operator once, in order, and holds its materialized
+    * result. After each one the cached frames must be exactly those of
+    * before (checked per operator: a later operator that re-persists
+    * the same plan would otherwise unpersist an earlier one's leak);
+    * after all of them the persisted RDDs at most those of before plus
+    * one checkpoint per held result — every signature, band and edge
+    * cache and every loop checkpoint the operators staged is gone. */
+  private def assertReleasedAfter(ops: (() => org.apache.spark.sql.DataFrame)*): Unit = {
+    import org.apache.spark.sql.graftshim.CacheProbe.cachedEntries
+    val sc = spark.sparkContext
+    val cachedBefore = cachedEntries(spark)
+    val before = sc.getPersistentRDDs.size
+    val results = ops.zipWithIndex.map { case (op, i) =>
+      val r = op()
+      assert(cachedEntries(spark) == cachedBefore,
+        s"operator $i: ${cachedEntries(spark) - cachedBefore} cached frames left after its result materialized")
+      r
+    }
     // poll rather than one fixed sleep: the ops release via
     // unpersist(blocking=false) and ContextCleaner GC, both asynchronous —
     // a single 500 ms nap made this assert timing-dependent (the r4
     // pageRank flake class)
     val deadline = System.nanoTime() + 10000000000L
-    while (cachedRdds() > mid + 3 && System.nanoTime() < deadline) {
+    while (sc.getPersistentRDDs.size > before + results.size && System.nanoTime() < deadline) {
       System.gc(); Thread.sleep(100)
     }
-    val after = cachedRdds()
-    assert(after <= mid + 3,
-      s"persistent RDDs grow across invocations: before=$before mid=$mid after=$after")
+    val after = sc.getPersistentRDDs.size
+    assert(after <= before + results.size,
+      s"persisted RDDs: before=$before after=$after with ${results.size} results held")
+  }
+
+  test("x06/x13/x14: caches are released after the result materializes") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    assertReleasedAfter(
+      () => graft.ops.TrainingOps.simhashNearDupPairs(docs),
+      () => graft.ops.TrainingOps.jaccardNearDupPairs(docs),
+      () => graft.ops.TrainingOps.dupComponents(docs))
   }
 
   test("x56: first-occurrence pick is a min-struct aggregate, not a hot-key window") {
@@ -228,21 +236,9 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("x56/x59: caches are released after the result materializes") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    def cachedRdds(): Int = spark.sparkContext.getPersistentRDDs.size
-    val before = cachedRdds()
-    graft.ops.TrainingOps.paragraphDedup(docs).count()
-    graft.ops.TrainingOps.editNearDupPairs(docs).count()
-    val mid = cachedRdds()
-    graft.ops.TrainingOps.paragraphDedup(docs).count()
-    graft.ops.TrainingOps.editNearDupPairs(docs).count()
-    // poll, don't nap (async unpersists — the r4 pageRank flake class)
-    val deadline = System.nanoTime() + 10000000000L
-    while (cachedRdds() > mid + 2 && System.nanoTime() < deadline) {
-      System.gc(); Thread.sleep(100)
-    }
-    val after = cachedRdds()
-    assert(after <= mid + 2,
-      s"persistent RDDs grow across invocations: before=$before mid=$mid after=$after")
+    assertReleasedAfter(
+      () => graft.ops.TrainingOps.paragraphDedup(docs),
+      () => graft.ops.TrainingOps.editNearDupPairs(docs))
   }
 
   test("x19: decontamination broadcasts the benchmark gram set, never shuffles the corpus grams") {
@@ -815,10 +811,10 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val corpus = docs.filter(pmod(col("doc_id"), lit(13L)) =!= 0)
     val ref = docs.filter(pmod(col("doc_id"), lit(13L)) === 0)
-    val (refFp, base, buckets, _) = graft.ops.TrainingOps.ingestRefTables(ref)
+    val r = graft.ops.TrainingOps.ingestRefTables(ref)
     try {
       val pFull = graft.ops.TrainingOps
-        .ingestCurateCore(corpus, refFp, buckets, 0.8)
+        .ingestCurateCore(corpus, r.fp, r.buckets, 0.8)
         .queryExecution.optimizedPlan.toString
       // Scope the count to the STREAMING CORE's own operators (ADVICE
       // r05): toString prints the persisted ref tables' cached subtrees
@@ -842,7 +838,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val shingleHashes = "conv\\(substring\\(md5".r.findAllIn(p).length
       assert(shingleHashes <= 5,
         s"per-shingle md5 chain inlined $shingleHashes times — barrier lost")
-    } finally { refFp.unpersist(); base.unpersist(); buckets.unpersist() }
+    } finally r.release()
   }
 
   test("a job failing while a plan is built or materialized releases what it staged") {

@@ -2782,28 +2782,24 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, (1 to 60).map(i => s"zzz$i qq").mkString(" "), "in")) // disjoint
     val docs = (refRows ++ inRows).toDF("doc_id", "text", "source")
     val ref = docs.filter(pmod(col("doc_id"), lit(13L)) === 0)
-    val (refFp, base, buckets, hotOpt) =
-      TrainingOps.ingestRefTables(ref, 9, TrainingOps.IngestBucketCap)
+    val r = TrainingOps.ingestRefTables(ref, 9, TrainingOps.IngestBucketCap)
     try {
-      assert(hotOpt.isDefined,
+      assert(r.hot.isDefined,
         "planted near-identical ref boilerplate must overflow the bucket cap")
-      val maxArr = buckets.agg(max(size(col("shs")))).head()
+      val maxArr = r.buckets.agg(max(size(col("shs")))).head()
       assert(maxArr.isNullAt(0) ||
         maxArr.getInt(0) <= TrainingOps.IngestBucketCap,
         s"capped bucket arrays must stay bounded: $maxArr")
-      assert(hotOpt.get.count() > TrainingOps.IngestBucketCap,
+      assert(r.hot.get.count() > TrainingOps.IngestBucketCap,
         "every member of an over-cap key must route through the pair join")
-    } finally {
-      refFp.unpersist(); base.unpersist(); buckets.unpersist()
-      hotOpt.foreach(_.unpersist())
-    }
+    } finally r.release()
     def rows(a: Array[org.apache.spark.sql.Row]) = a.map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     val capped = rows(TrainingOps.ingestCurate(docs).collect())
-    val (rf2, b2, bk2, _) = TrainingOps.ingestRefTables(ref) // uncapped
+    val r2 = TrainingOps.ingestRefTables(ref) // uncapped
     val uncapped = try rows(TrainingOps.ingestCurateCore(
-        docs.filter(pmod(col("doc_id"), lit(13L)) =!= 0), rf2, bk2, 0.8).collect())
-      finally { rf2.unpersist(); b2.unpersist(); bk2.unpersist() }
+        docs.filter(pmod(col("doc_id"), lit(13L)) =!= 0), r2.fp, r2.buckets, 0.8).collect())
+      finally r2.release()
     assert(capped == uncapped,
       s"capped gate drifted from the uncapped core:\n$capped\nvs\n$uncapped")
     val byId = capped.map(t => t._1 -> t).toMap

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.CacheProbe.cachedEntries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.BeforeAndAfterAll
@@ -340,8 +341,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b2 = Seq((3L, s"$bench13 middle filler $other13"),
       (4L, "another clean one"))
     val input = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.streamDecontaminate(
+    val cachedBefore = cachedEntries(spark)
+    val twin = StreamingPipeline.streamDecontaminate(
       input.toDF().toDF("doc_id", "text"), benchmark)
+    val q = twin.plan
       .writeStream.format("memory").queryName("decon_out")
       .outputMode(OutputMode.Update).start()
     input.addData(b1: _*)
@@ -349,6 +352,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     input.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
+    twin.release()
+    assert(cachedEntries(spark) == cachedBefore, "the static gram set outlived its stream")
     // update mode re-emits a key only if its aggregate changed; each
     // doc's grams arrive in one row, so the LAST value per key is final
     val streamed = spark.sql("SELECT doc_id, n_hits FROM decon_out")
@@ -374,8 +379,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val live1 = Seq((200L, "a", 3.0), (201L, "a", 50.0), (202L, "b", 5.0))
     val live2 = Seq((203L, "a", -9.0), (204L, "b", 5.1))
     val input = MemoryStream[(Long, String, Double)]
-    val q = StreamingPipeline.streamEventAnomalies(
+    val cachedBefore = cachedEntries(spark)
+    val twin = StreamingPipeline.streamEventAnomalies(
       input.toDF().toDF("event_id", "event_type", "value"), hist)
+    val q = twin.plan
       .writeStream.format("memory").queryName("anom_out")
       .outputMode(OutputMode.Append).start()
     input.addData(live1: _*)
@@ -383,6 +390,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     input.addData(live2: _*)
     q.processAllAvailable()
     q.stop()
+    twin.release()
+    assert(cachedEntries(spark) == cachedBefore, "the static fence table outlived its stream")
     val streamed = spark.sql("SELECT * FROM anom_out").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getLong(5))).toSet
@@ -411,8 +420,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val live1 = Seq(doc(300L, 55, "s1"), doc(301L, 2, "s1"), doc(302L, 30, "s2"))
     val live2 = Seq(doc(303L, 98, "s1"), doc(304L, 60, "s2"))
     val input = MemoryStream[(Long, String, String)]
-    val q = StreamingPipeline.streamCalibratedScores(
+    val cachedBefore = cachedEntries(spark)
+    val twin = StreamingPipeline.streamCalibratedScores(
       input.toDF().toDF("doc_id", "text", "source"), hist)
+    val q = twin.plan
       .writeStream.format("memory").queryName("calib_out")
       .outputMode(OutputMode.Append).start()
     input.addData(live1: _*)
@@ -420,6 +431,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     input.addData(live2: _*)
     q.processAllAvailable()
     q.stop()
+    twin.release()
+    assert(cachedEntries(spark) == cachedBefore, "the static calibration table outlived its stream")
     def rowSet(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).toSet
@@ -453,8 +466,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val live1 = Seq((1L, refText), (2L, "short novel text one of a kind here"))
     val live2 = Seq((3L, refText), (4L, "another fresh document nothing like the reference"))
     val input = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.streamIngestCurate(
+    val cachedBefore = cachedEntries(spark)
+    val twin = StreamingPipeline.streamIngestCurate(
       input.toDF().toDF("doc_id", "text"), ref)
+    val q = twin.plan
       .writeStream.format("memory").queryName("ingest_out")
       .outputMode(OutputMode.Append).start()
     input.addData(live1: _*)
@@ -462,14 +477,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     input.addData(live2: _*)
     q.processAllAvailable()
     q.stop()
+    twin.release()
+    assert(cachedEntries(spark) == cachedBefore, "the static ref tables outlived their stream")
     def rowSet(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSet
     val streamed = rowSet(spark.sql("SELECT * FROM ingest_out").collect())
-    val (refFp, base, buckets, _) = graft.ops.TrainingOps.ingestRefTables(ref)
+    val r = graft.ops.TrainingOps.ingestRefTables(ref)
     val batch = try rowSet(graft.ops.TrainingOps.ingestCurateCore(
-      (live1 ++ live2).toDF("doc_id", "text"), refFp, buckets, 0.8).collect())
-    finally { refFp.unpersist(); base.unpersist(); buckets.unpersist() }
+      (live1 ++ live2).toDF("doc_id", "text"), r.fp, r.buckets, 0.8).collect())
+    finally r.release()
     assert(streamed == batch, s"stream $streamed vs batch $batch")
     val byId = streamed.map(t => t._1 -> t).toMap
     assert(byId(1L)._2 == 1L && byId(1L)._3 == 1L && byId(1L)._5 == 0L,
