@@ -9,62 +9,38 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * GraftExtensions)`) makes the engine's native expressions available
   * to plain SQL (`SELECT simhash60(text) ...`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.simhash60Descriptor)
-    ext.injectFunction(GraftFunctions.nfcDescriptor)
-    ext.injectFunction(GraftFunctions.embedLshDescriptor)
-    ext.injectFunction(GraftFunctions.mightContainLongDescriptor)
-    ext.injectFunction(GraftFunctions.dotSeqDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
 }
 
 /** Runtime registration for library callers that already hold a built
   * session (idempotent; TrainingOps calls it before using the
   * functions). */
 object GraftFunctions {
-  val simhash60Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash60"),
-    new ExpressionInfo(classOf[graft.expr.SimHash60].getName, "simhash60"),
-    (children: Seq[Expression]) => graft.expr.SimHash60(children.head))
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val nfcDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("nfc_normalize"),
-    new ExpressionInfo(classOf[graft.expr.NfcNormalize].getName, "nfc_normalize"),
-    (children: Seq[Expression]) => graft.expr.NfcNormalize(children.head))
+  private def descriptor(name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  val embedLshDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("embed_lsh_sig48"),
-    new ExpressionInfo(classOf[graft.expr.EmbedLshSig48].getName, "embed_lsh_sig48"),
-    (children: Seq[Expression]) => graft.expr.EmbedLshSig48(children.head))
+  /** The engine's native SQL functions: the one list both
+    * [[GraftExtensions]] and [[register]] install. */
+  val descriptors: Seq[Descriptor] = Seq(
+    descriptor("simhash60", classOf[graft.expr.SimHash60])(c => graft.expr.SimHash60(c.head)),
+    descriptor("nfc_normalize", classOf[graft.expr.NfcNormalize])(
+      c => graft.expr.NfcNormalize(c.head)),
+    descriptor("embed_lsh_sig48", classOf[graft.expr.EmbedLshSig48])(
+      c => graft.expr.EmbedLshSig48(c.head)),
+    // Spark's native Bloom probe (codegen'd, used by its own runtime
+    // join filters) exposed as a callable function: arg0 = the
+    // serialized sketch (binary literal, as written by
+    // DataFrameStatFunctions.bloomFilter), arg1 = the long value.
+    descriptor("might_contain_long",
+        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain])(
+      c => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(c(0), c(1))),
+    descriptor("dot_seq", classOf[graft.expr.DotSeq])(c => graft.expr.DotSeq(c(0), c(1))))
 
-  /** Spark's native Bloom probe (codegen'd, used by its own runtime
-    * join filters) exposed as a callable function: arg0 = the serialized
-    * sketch (binary literal, as written by
-    * DataFrameStatFunctions.bloomFilter), arg1 = the long value. */
-  val mightContainLongDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("might_contain_long"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-      "might_contain_long"),
-    (children: Seq[Expression]) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        children(0), children(1)))
-
-  val dotSeqDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_seq"),
-    new ExpressionInfo(classOf[graft.expr.DotSeq].getName, "dot_seq"),
-    (children: Seq[Expression]) => graft.expr.DotSeq(children(0), children(1)))
-
-  def register(spark: SparkSession): Unit = {
-    org.apache.spark.sql.graftshim.GraftRegistry.register(
-      spark, "simhash60", simhash60Descriptor._3)
-    org.apache.spark.sql.graftshim.GraftRegistry.register(
-      spark, "nfc_normalize", nfcDescriptor._3)
-    org.apache.spark.sql.graftshim.GraftRegistry.register(
-      spark, "embed_lsh_sig48", embedLshDescriptor._3)
-    org.apache.spark.sql.graftshim.GraftRegistry.register(
-      spark, "might_contain_long", mightContainLongDescriptor._3)
-    org.apache.spark.sql.graftshim.GraftRegistry.register(
-      spark, "dot_seq", dotSeqDescriptor._3)
-  }
+  def register(spark: SparkSession): Unit =
+    for ((id, _, build) <- descriptors)
+      org.apache.spark.sql.graftshim.GraftRegistry.register(spark, id.funcName, build)
 }

@@ -124,9 +124,6 @@ object Pipeline {
       var minK: String = null
       var maxK: String = null
       tc.addTaskCompletionListener[Unit] { _ =>
-        if (sys.env.contains("GRAFT_LINEAGE_DEBUG"))
-          System.err.println(s"[lineage] stage=${tc.stageId()} sAttempt=${tc.stageAttemptNumber()} " +
-            s"pid=$pid tAttempt=${tc.attemptNumber()} n=$n")
         acc.add(Lineage(pid, minK, maxK, n, (System.nanoTime() - t0) / 1000000))
       }
       it.map { r =>

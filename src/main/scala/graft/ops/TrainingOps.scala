@@ -17,6 +17,18 @@ object TrainingOps {
     * lower → collapse whitespace → trim. */
   def normText(c: Column): Column = trim(regexp_replace(lower(c), "\\s+", " "))
 
+  // The three word tokenizers; each is a policy its DuckDB oracles
+  // mirror. Empty tokens stay in the array: callers filter them.
+
+  /** [[normText]] split on single spaces. */
+  private def normWords(c: Column): Column = split(normText(c), " ")
+
+  /** Lowercase letter runs: `lower(c)` split on `[^a-z]+`. */
+  private def alphaWords(c: Column): Column = split(lower(c), "[^a-z]+")
+
+  /** The trimmed raw text split on whitespace runs. */
+  private def spaceWords(c: Column): Column = split(trim(c), "\\s+")
+
   /** Portable 32-bit hash both Spark and DuckDB can compute identically:
     * first 8 hex digits of md5. */
   def portableHash(c: Column): Column =
@@ -292,6 +304,24 @@ object TrainingOps {
     (if (self) joined.filter(col(a) < col(b)) else joined).select(a, b).distinct()
   }
 
+  /** The simhash band table of (doc_id, text) rows: each 60-bit
+    * signature split into 4×15-bit (band, bval) keys, as (doc_id,
+    * simhash, band, bval) — the one banding of the batch x06 join and
+    * the streaming near-dup state, whose pair sets must agree. Built on
+    * the unsorted signatures: nothing downstream reads their order. */
+  private[graft] def simhashBands(docs: DataFrame): DataFrame = {
+    val nBands = 4
+    val bandBits = SimhashBits / nBands // 15
+    val bandMask = (1L << bandBits) - 1
+    simhashSigs(docs).select(col("doc_id"), col("simhash"),
+      explode(array((0 until nBands).map { i =>
+        struct(lit(i).as("band"),
+          call_function("shiftright", col("simhash"), lit(i * bandBits))
+            .bitwiseAND(bandMask).as("bval"))
+      }: _*)).as("b"))
+      .select(col("doc_id"), col("simhash"), col("b.band").as("band"), col("b.bval").as("bval"))
+  }
+
   /** Exact-duplicate membership (doc_id → normalized-text fingerprint)
     * and one representative (min doc_id) per group — the pre-collapse in
     * front of every band join (VERDICT r04 next #5): m IDENTICAL
@@ -381,9 +411,10 @@ object TrainingOps {
   }
 
   /** UNSORTED verified pairs, materialized and cache-released — the
-    * entry point for composers (x14/x37/x49/x91/x100) that feed the
-    * pairs into order-free machinery (connected components): same rows
-    * as x13, minus the presentation sort exchange. */
+    * entry point for composers (x14, and x37/x49/x91/x100 through
+    * [[nearDupLabels]]) that feed the pairs into order-free machinery
+    * (connected components): same rows as x13, minus the presentation
+    * sort exchange. */
   private def jaccardPairsForCompose(docs: DataFrame, threshold: Double,
                                      k: Int = 9): DataFrame = {
     val b = repBase(docs, k)
@@ -442,8 +473,13 @@ object TrainingOps {
     * carries the same recursive-CTE oracle as x14, not just the
     * spec-level equivalence (VERDICT r03 next #4). */
   def dupComponentsStar(docs: DataFrame, threshold: Double = 0.8): DataFrame =
-    connectedComponentsStar(
-      jaccardPairsForCompose(docs, threshold))
+    nearDupLabels(docs, threshold).map(componentTable).materialize()
+
+  /** The per-member near-dup labels every star composer reads (x37,
+    * x49, x91, x100): x13's verified pairs, then the lazy star-contraction
+    * labels over them. */
+  private def nearDupLabels(docs: DataFrame, threshold: Double): Staged =
+    connectedComponentsStarMembersWithRounds(jaccardPairsForCompose(docs, threshold))._1
 
   /** localCheckpoint as a [[Staged]] whose release frees exactly the
     * persistent-RDD ids the checkpoint created, so iterative algorithms
@@ -548,11 +584,6 @@ object TrainingOps {
     (labels.map(componentTable).materialize(), rounds)
   }
 
-  /** The per-member fixed point under the aggregate: (id, comp) labels
-    * for every node in the pair graph, eagerly checkpointed, as a
-    * [[Staged]] the caller materializes or releases (canonicalDocs
-    * consumes the labels directly; the aggregate surfaces above derive
-    * their component table from the same labels). */
   // Both star steps need their edge set twice under the SAME key —
   // once aggregated to the per-u minimum, once re-joined against it.
   // An explicit repartition(u) up front makes the aggregate AND both
@@ -618,6 +649,13 @@ object TrainingOps {
         (col("nmin") < col("comp")).as("chg"))
   }
 
+  /** The per-member fixed point under the aggregate: (id, comp) labels
+    * for every node in the pair graph, as a LAZY [[Staged]] over the
+    * last round's edge checkpoint — the caller reads the labels once
+    * and its own materialize is their one checkpoint, run while the
+    * edge blocks are live, then freed (canonicalDocs consumes the
+    * labels directly; the aggregate surfaces above derive their
+    * component table from the same labels). */
   private[graft] def connectedComponentsStarMembersWithRounds(
       pairs: DataFrame): (Staged, Int) = {
     // Order-independent STRONG digest of the edge set: count + bit_xor
@@ -633,7 +671,7 @@ object TrainingOps {
         coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    // lazy: the first checksum materializes it (one job, not two)
+    // lazy: round 1's checksum materializes it with the round
     var edges = trackedCheckpoint(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .filter(col("u") =!= col("v")).distinct(),
@@ -641,7 +679,11 @@ object TrainingOps {
     // mirrors labelPropagationComponents: the live round's checkpoint
     // blocks are released on every exit incl. the non-convergence throw
     val rounds = releaseOnFailure(() => edges.release()) {
-      var prev = checksum(edges.plan)
+      // no checksum of the input edges: x13's pairs (id_a < id_b) never
+      // equal a star fixed point ((node, root), node > root), so that
+      // action cannot stop the loop; an input that is already a fixed
+      // point costs one extra round. Count -1 matches no checksum.
+      var prev = (-1L, 0L)
       var rounds = 0
       var stable = false
       while (!stable && rounds < 50) {
@@ -665,9 +707,7 @@ object TrainingOps {
     // fixed point: edges = {(node, root)} stars; roots attach to themselves
     val roots = edges.plan.select(col("v").as("id"), col("v").as("comp")).distinct()
     val members = edges.plan.select(col("u").as("id"), col("v").as("comp"))
-    // tracked eager checkpoint: materialized BEFORE the edge blocks are
-    // released; the caller owns (and must release) the label blocks
-    (try trackedCheckpoint(members.union(roots).distinct()) finally edges.release(), rounds)
+    (Staged(members.union(roots).distinct(), edges.release), rounds)
   }
 
   /** SimHash (60-bit) over word tokens. The per-word hash is the first
@@ -683,11 +723,13 @@ object TrainingOps {
     * stays as built-in columns. */
   val SimhashBits = 60
 
-  def simhash(docs: DataFrame): DataFrame = {
+  def simhash(docs: DataFrame): DataFrame = simhashSigs(docs).orderBy("doc_id")
+
+  /** Unsorted (doc_id, simhash) signatures of (doc_id, text) rows. */
+  private def simhashSigs(docs: DataFrame): DataFrame = {
     graft.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("simhash60", normText(col("text"))).as("simhash"))
-      .orderBy("doc_id")
   }
 
   /** SimHash near-dup pairs via 15-bit band blocking: a pair within
@@ -710,20 +752,9 @@ object TrainingOps {
   /** Lazy plan + cached band table (for plan assertions). */
   private[graft] def simhashNearDupPairsPlan(
       docs: DataFrame, maxHamming: Int = 12): Staged = {
-    val nBands = 4
-    val bandBits = SimhashBits / nBands // 15
-    val bandMask = (1L << bandBits) - 1
     // spread before the fingerprint stage — same single-split rationale
     // as jaccardNearDupPairsPlan
-    val sigs = simhash(spreadInput(docs))
-    val bands = sigs.select(col("doc_id"), col("simhash"),
-      explode(array((0 until nBands).map { i =>
-        struct(lit(i).as("band"),
-          call_function("shiftright", col("simhash"), lit(i * bandBits))
-            .bitwiseAND(bandMask).as("bval"))
-      }: _*)).as("b"))
-      .select(col("doc_id"), col("simhash"), col("b.band").as("band"), col("b.bval").as("bval"))
-      .persist()
+    val bands = simhashBands(spreadInput(docs)).persist()
     val a = bands.select(col("band"), col("bval"),
       col("doc_id").as("id_a"), col("simhash").as("sim_a"))
     val b = bands.select(col("band"), col("bval"),
@@ -1085,7 +1116,7 @@ object TrainingOps {
     * below it (EliminateSorts does not look through `percentile`),
     * paying a pointless range exchange. */
   private[graft] def qualityScoreCore(docs: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = spaceWords(col("text"))
     val nTokens = when(length(trim(col("text"))) === 0, 0).otherwise(size(toks))
     val nAlpha = length(regexp_replace(col("text"), "[^A-Za-z]", ""))
     val nStop = size(filter(toks, t => lower(t).isInCollection(qualityStopwords)))
@@ -1102,7 +1133,7 @@ object TrainingOps {
     * (letter runs / digit runs / single symbols). */
   def tokenCounts(docs: DataFrame): DataFrame = {
     val ws = when(length(trim(col("text"))) === 0, 0)
-      .otherwise(size(split(trim(col("text")), "\\s+")))
+      .otherwise(size(spaceWords(col("text"))))
     val re = size(regexp_extract_all(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
     docs.select(col("doc_id"), ws.cast(LongType).as("ws_tokens"), re.cast(LongType).as("re_tokens")).orderBy("doc_id")
   }
@@ -1285,7 +1316,7 @@ object TrainingOps {
     * ([[graft.streaming.StreamingPipeline.streamDecontaminate]]); see
     * [[decontaminate]] for the hash width and clamped-slice contract. */
   private[graft] def wordGramHashes(c: Column, n: Int): Column = {
-    val toks = split(normText(c), " ")
+    val toks = normWords(c)
     transform(
       sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
       i => conv(substring(md5(concat_ws(" ", slice(toks, i.cast("int"), lit(n)))), 1, 15), 16, 10)
@@ -1369,7 +1400,7 @@ object TrainingOps {
     // as the SQL oracle's `SELECT count(*) FROM documents`)
     val nDocs = docs.groupBy().agg(count(lit(1)).cast(DoubleType).as("n_docs"))
     val words = docs
-      .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      .select(col("doc_id"), explode(alphaWords(col("text"))).as("w"))
       .filter(col("w") =!= "")
     val tf = words.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
@@ -1611,7 +1642,7 @@ object TrainingOps {
       buckets: Int = 64): Staged = {
     require(chunkTokens >= 1 && buckets >= 1)
     val nToks = when(length(trim(col("text"))) === 0, 0)
-      .otherwise(size(split(trim(col("text")), "\\s+")))
+      .otherwise(size(spaceWords(col("text"))))
     // pass 1 runs two jobs over the cached token counts — map releases
     // them if either fails
     Staged.persisted(docs.select(col("doc_id"), nToks.cast(LongType).as("n_tokens"))).map { toks =>
@@ -1667,7 +1698,7 @@ object TrainingOps {
   def stratifiedSample(docs: DataFrame, nPer: Int = 25,
                        bandTokens: Int = 20, maxBand: Int = 5): DataFrame = {
     val nToks = when(length(trim(col("text"))) === 0, 0)
-      .otherwise(size(split(trim(col("text")), "\\s+")))
+      .otherwise(size(spaceWords(col("text"))))
     val banded = docs.select(col("doc_id"), nToks.cast(LongType).as("nt"))
       .withColumn("band", least(expr(s"nt DIV $bandTokens"), lit(maxBand.toLong)))
       .withColumn("rk",
@@ -1961,7 +1992,7 @@ object TrainingOps {
     * trick as tfidfTopTerms (no separate count() action). */
   def unigramLogprob(docs: DataFrame): DataFrame = {
     val words = docs
-      .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      .select(col("doc_id"), explode(alphaWords(col("text"))).as("w"))
       .filter(col("w") =!= "")
     val tf = words.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
     val counts = tf.groupBy("w").agg(sum("tf").as("cnt"))
@@ -2134,9 +2165,9 @@ object TrainingOps {
     * Spread before the per-position 13-gram md5 stage — the single-split
     * lesson (see [[spreadInput]]; measured 4.3 s single-task at sf0.1). */
   private def windowTable(docs: DataFrame, n: Int): DataFrame = {
-    val toks = split(normText(col("text")), " ")
+    val toks = normWords(col("text"))
     spreadInput(docs)
-      .filter(size(split(normText(col("text")), " ")) >= n)
+      .filter(size(toks) >= n)
       .select(col("doc_id"),
         posexplode(transform(
           sequence(lit(1), size(toks) - (n - 1)),
@@ -2172,9 +2203,7 @@ object TrainingOps {
     * the rank window partitions by component — near-dup clusters are
     * small by construction, so no skewed window partition. */
   def canonicalDocs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val pairs = jaccardPairsForCompose(docs, threshold)
-    val (members, _) = connectedComponentsStarMembersWithRounds(pairs)
-    members.map { labels =>
+    nearDupLabels(docs, threshold).map { labels =>
       val q = qualityScoreCore(docs).select("doc_id", "n_chars", "alpha_ratio")
       val rank = Window.partitionBy("component")
         .orderBy(col("alpha_ratio").desc, col("n_chars").desc, col("doc_id").asc)
@@ -2198,7 +2227,7 @@ object TrainingOps {
     * 100 TB sink drops entirely (chunk order inside the corpus is
     * irrelevant; the orderBy is for the deterministic oracle diff). */
   def chunkDocs(docs: DataFrame, width: Int = 32, stride: Int = 24): DataFrame = {
-    val toks = split(normText(col("text")), " ")
+    val toks = normWords(col("text"))
     val d = docs.select(col("doc_id"), toks.as("toks"))
     val nToks = size(col("toks"))
     val lastFull = greatest(nToks - (width - 1), lit(1))
@@ -2385,7 +2414,7 @@ object TrainingOps {
       posexplode(array((0 until rows).map(r => cell(r, col("tok"))): _*))
         .as(Seq("r", "c")))
     val tc = docs
-      .select(explode(split(normText(col("text")), " ")).as("tok"))
+      .select(explode(normWords(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy("tok").agg(count(lit(1)).cast(LongType).as("n_exact"))
       .persist()
@@ -2416,7 +2445,7 @@ object TrainingOps {
     * 10^12-row corpus never materializes a bigram row set), so the op
     * is map-only and a real sink drops the sort entirely. */
   def hashedQualityScore(docs: DataFrame, buckets: Int = 4096): DataFrame = {
-    val d = docs.select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
+    val d = docs.select(col("doc_id"), normWords(col("text")).as("toks"))
     val n = size(col("toks"))
     def bucket(g: Column) = pmod(portableHash(concat(lit("qc:"), g)), lit(buckets.toLong))
     def weight(b: Column) =
@@ -2499,7 +2528,7 @@ object TrainingOps {
     * NULL ttr rather than a divide-by-zero (ANSI mode throws). */
   def textEntropy(docs: DataFrame): DataFrame = {
     val chars = filter(split(col("text"), ""), c => c =!= "")
-    val words = filter(split(lower(col("text")), "[^a-z]+"), w => w =!= "")
+    val words = filter(alphaWords(col("text")), w => w =!= "")
     val units = docs.select(col("doc_id"),
       explode(concat(
         transform(chars, c => struct(lit("c").as("kind"), c.as("v"))),
@@ -2548,7 +2577,7 @@ object TrainingOps {
     * at 100 TB a map-only pass. */
   def cdcChunks(docs: DataFrame, modulus: Int = 8): DataFrame = {
     val base = docs.select(col("doc_id"),
-      filter(split(normText(col("text")), " "), w => w =!= "").as("toks"))
+      filter(normWords(col("text")), w => w =!= "").as("toks"))
       .filter(size(col("toks")) > 0)
     val n = size(col("toks"))
     // 1-based positions whose word closes a chunk. The i < n predicate
@@ -2639,7 +2668,7 @@ object TrainingOps {
     * compare crosses engines without nested-type coercion. */
   def invertedIndex(docs: DataFrame, shards: Int = 4): DataFrame = {
     val words = docs.select(col("doc_id"),
-      explode(split(lower(col("text")), "[^a-z]+")).as("term"))
+      explode(alphaWords(col("text"))).as("term"))
       .filter(col("term") =!= "")
     val tf = words.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
     tf.withColumn("shard", pmod(col("doc_id"), lit(shards.toLong)))
@@ -2668,7 +2697,7 @@ object TrainingOps {
     * convention; docs with <2 tokens get NULL nll through the left
     * join, not a crash or a silent drop. */
   def bigramLogprob(docs: DataFrame, k: Double = 0.5): DataFrame = {
-    val toksCol = filter(split(lower(col("text")), "[^a-z]+"), w => w =!= "")
+    val toksCol = filter(alphaWords(col("text")), w => w =!= "")
     val d = docs.select(col("doc_id"), toksCol.as("toks"))
     val n = size(col("toks"))
     val bi = d.filter(n >= 2).select(col("doc_id"),
@@ -2710,7 +2739,7 @@ object TrainingOps {
     * in-plan 1-row broadcasts. Zero-feature docs arrive through the
     * left join with NULL score, decided but not fabricated. */
   def dsirWeights(docs: DataFrame, buckets: Int = 4096): DataFrame = {
-    val d = docs.select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
+    val d = docs.select(col("doc_id"), normWords(col("text")).as("toks"))
     val n = size(col("toks"))
     val feats = d.filter(n >= 2).select(col("doc_id"),
       explode(transform(sequence(lit(1), n - 1),
@@ -2753,7 +2782,7 @@ object TrainingOps {
         count(lit(1)).as("n_spans"),
         sum(col("span_end") - col("span_start") + 1).as("dup_tokens"))
     val counted = docs.select(col("doc_id"),
-      size(filter(split(normText(col("text")), " "), w => w =!= ""))
+      size(filter(normWords(col("text")), w => w =!= ""))
         .cast(LongType).as("n_tokens"))
     counted.join(spans, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
@@ -2832,7 +2861,7 @@ object TrainingOps {
     * broadcast. Zero-token docs report 0/0, decided not absent. */
   def vocabOov(docs: DataFrame, v: Int = 16): DataFrame = {
     val words = docs.select(col("doc_id"),
-      explode(split(lower(col("text")), "[^a-z]+")).as("term"))
+      explode(alphaWords(col("text"))).as("term"))
       .filter(col("term") =!= "")
     val tf = words.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val vocab = tf.groupBy("term").agg(sum("tf").as("cnt"))
@@ -2890,7 +2919,7 @@ object TrainingOps {
     val spanList = repeatedSpans(docs, n)
       .groupBy("doc_id")
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("spans"))
-    val toks = docs.select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
+    val toks = docs.select(col("doc_id"), normWords(col("text")).as("toks"))
     toks.join(spanList, Seq("doc_id"), "left")
       .withColumn("spans", coalesce(col("spans"),
         array().cast("array<struct<span_start:bigint,span_end:bigint>>")))
@@ -2989,7 +3018,7 @@ object TrainingOps {
     * one-row frames (in-plan, the x45 convention — no driver collect).
     * Integer DIV arithmetic end to end. */
   def corpusDatasheet(docs: DataFrame): DataFrame = {
-    val toks = split(normText(col("text")), " ")
+    val toks = normWords(col("text"))
     val perDoc = docs.select(
       col("doc_id"),
       md5(normText(col("text"))).as("fp"),
@@ -3004,7 +3033,7 @@ object TrainingOps {
       expr("sum(n_toks) DIV count(1)").as("mean_doc_tokens"),
       expr("sum(alpha_bp) DIV count(1)").as("mean_alpha_bp"))
     val terms = docs
-      .select(explode(split(normText(col("text")), " ")).as("term"))
+      .select(explode(normWords(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .agg(countDistinct(col("term")).as("n_distinct_terms"))
     core.crossJoin(broadcast(terms))
@@ -3020,7 +3049,7 @@ object TrainingOps {
     * mixture-sampling stage (x51) reads its budgets against. One
     * bounded aggregation (sources ≪ docs). */
   def sourceMixture(docs: DataFrame): DataFrame = {
-    val toks = split(normText(col("text")), " ")
+    val toks = normWords(col("text"))
     val perDoc = docs.select(
       col("source"),
       size(filter(toks, t => t =!= "")).cast(LongType).as("n_toks"),
@@ -3058,7 +3087,7 @@ object TrainingOps {
     * partition's local top-k). */
   def bm25TopDocs(docs: DataFrame, nQueries: Int = 5, topK: Int = 10): DataFrame = {
     Staged.persisted(docs.select(col("doc_id"),
-        explode(split(normText(col("text")), " ")).as("term"))
+        explode(normWords(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     ).map { tf =>
@@ -3197,7 +3226,7 @@ object TrainingOps {
     * row_number is legal). */
   def zipfFit(docs: DataFrame, v: Int = 256): DataFrame = {
     val words = docs
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("term"))
+      .select(explode(alphaWords(col("text"))).as("term"))
       .filter(col("term") =!= "")
     val top = words.groupBy("term").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("term").asc).limit(v)
@@ -3239,7 +3268,7 @@ object TrainingOps {
     * 1-row broadcasts; top-k is a TakeOrderedAndProject. The min-count
     * cut runs BEFORE the joins so rare-pair noise never shuffles. */
   def pmiBigrams(docs: DataFrame, minCount: Long = 3L, topK: Int = 50): DataFrame = {
-    val toksCol = filter(split(lower(col("text")), "[^a-z]+"), t => t =!= "")
+    val toksCol = filter(alphaWords(col("text")), t => t =!= "")
     val d = docs.select(col("doc_id"), toksCol.as("toks"))
     val n = size(col("toks"))
     val uni = d.select(explode(col("toks")).as("w"))
@@ -3279,7 +3308,7 @@ object TrainingOps {
   def lexicalRichness(docs: DataFrame): DataFrame = {
     val words = docs
       .select(col("source"),
-        explode(split(lower(col("text")), "[^a-z]+")).as("term"))
+        explode(alphaWords(col("text"))).as("term"))
       .filter(col("term") =!= "")
     val st = words.groupBy("source", "term").agg(count(lit(1)).as("cnt"))
     val rolled = st.groupBy("source").agg(
@@ -3350,7 +3379,7 @@ object TrainingOps {
     * ≤|sources|-row aggregate instead of re-running the corpus-scale
     * tokenize scan on both sides of the cross join. */
   private[graft] def mixtureRatesPlan(docs: DataFrame): Staged = {
-    val toks = split(normText(col("text")), " ")
+    val toks = normWords(col("text"))
     val perDoc = docs.select(col("source"),
       size(filter(toks, t => t =!= "")).cast(LongType).as("n_toks"))
     val bySource = perDoc.groupBy("source").agg(sum("n_toks").as("n_tokens"))
@@ -3432,7 +3461,7 @@ object TrainingOps {
     * by broadcast. */
   private[graft] def sourceKlDivergencePlan(docs: DataFrame): Staged = {
     val st = docs.select(col("source"),
-        explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+        explode(alphaWords(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("source", "w").agg(count(lit(1)).as("cs"))
       .persist()
@@ -3584,7 +3613,7 @@ object TrainingOps {
     * x87 single-materialization shape). */
   private[graft] def sourceOverlapPlan(docs: DataFrame): Staged = {
     val st = docs.select(col("source"),
-        explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+        explode(alphaWords(col("text"))).as("w"))
       .filter(col("w") =!= "").distinct().persist()
     val sizes = st.groupBy("source").agg(count(lit(1)).as("n_terms"))
     val shared = st.join(st.select(col("source").as("source_b"), col("w")), "w")
@@ -3614,7 +3643,7 @@ object TrainingOps {
     * percentile ≡ quantile_cont (x24); at 10^12 rows swap
     * approx_percentile, same plan. */
   def difficultyBuckets(docs: DataFrame): DataFrame = {
-    val toks = filter(split(normText(col("text")), " "), t => t =!= "")
+    val toks = filter(normWords(col("text")), t => t =!= "")
     val scored = docs.select(col("doc_id"),
         size(toks).cast(LongType).as("n_toks"),
         aggregate(transform(toks, t => length(t).cast(LongType)),
@@ -3698,9 +3727,7 @@ object TrainingOps {
     * plus a map-only hash — no windows, no new shuffles. */
   def leakageSplit(docs: DataFrame, threshold: Double = 0.8,
                    valFolds: Long = 10L): DataFrame = {
-    val pairs = jaccardPairsForCompose(docs, threshold)
-    val (members, _) = connectedComponentsStarMembersWithRounds(pairs)
-    members.map { labels =>
+    nearDupLabels(docs, threshold).map { labels =>
       docs.select(col("doc_id"))
         .join(labels.select(col("id").as("doc_id"), col("comp")),
           Seq("doc_id"), "left")
@@ -3747,7 +3774,7 @@ object TrainingOps {
     * vocabulary, each word carried with its '|'-sentineled symbol
     * string and frequency. */
   private def wordVocab(docs: DataFrame): DataFrame =
-    docs.select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+    docs.select(explode(alphaWords(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("w"),
@@ -3795,7 +3822,7 @@ object TrainingOps {
     * IEEE double with a fixed operation order, so both engines produce
     * the identical rounded value. Zero-variance sources report 0. */
   def scoreCorrelation(docs: DataFrame): DataFrame = {
-    val toks = filter(split(normText(col("text")), " "), t => t =!= "")
+    val toks = filter(normWords(col("text")), t => t =!= "")
     val scored = docs.select(col("source"),
         expr("length(regexp_replace(text, '[^A-Za-z]', '')) * 10000" +
           " DIV greatest(length(text), 1)").as("x"),
@@ -4083,9 +4110,7 @@ object TrainingOps {
     * one primary-key left join plus one map-side-combinable aggregate
     * over the source key. */
   def dedupImpact(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val pairs = jaccardPairsForCompose(docs, threshold)
-    val (members, _) = connectedComponentsStarMembersWithRounds(pairs)
-    members.map { labels =>
+    nearDupLabels(docs, threshold).map { labels =>
       docs.select(col("doc_id"), col("source"))
         .join(labels.select(col("id").as("doc_id"), col("comp")),
           Seq("doc_id"), "left")
@@ -4125,7 +4150,7 @@ object TrainingOps {
     * ingest gate score from (no drift between the audit table and the
     * streaming gate). */
   private def gopherCounts(text: Column): Column = {
-    val toks = filter(split(trim(text), "\\s+"), t => t =!= "")
+    val toks = filter(spaceWords(text), t => t =!= "")
     val lines = filter(split(text, "\n"), l => l =!= "")
     // integer DIV on the ellipsis term itself (ADVICE r05): the removed
     // char count is always a multiple of 3 today, so double '/' + the
@@ -4240,7 +4265,7 @@ object TrainingOps {
         size(filter(split(col("sym"), "\\|"), x => x =!= ""))
           .cast(LongType).as("n_syms"))
       docs.select(col("source"),
-          explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+          explode(alphaWords(col("text"))).as("w"))
         .filter(col("w") =!= "")
         .groupBy("source", "w").agg(count(lit(1)).as("tf"))
         .join(nsyms, Seq("w"))
@@ -4322,7 +4347,7 @@ object TrainingOps {
     * agrees between Spark and DuckDB; no float log at a boundary). */
   def vocabCoverage(docs: DataFrame): DataFrame = {
     val vocab = docs
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("term"))
+      .select(explode(alphaWords(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("term").agg(count(lit(1)).as("cnt"))
     val byBucket = vocab
@@ -4373,7 +4398,7 @@ object TrainingOps {
     * oracle's empty CTEs produce, deliberate and auditable rather
     * than a fabricated score (review r5). */
   def stupidBackoff(docs: DataFrame, alpha: Double = 0.4): DataFrame = {
-    val toksCol = filter(split(lower(col("text")), "[^a-z]+"), w => w =!= "")
+    val toksCol = filter(alphaWords(col("text")), w => w =!= "")
     val d = docs.select(col("doc_id"), toksCol.as("toks"))
     val n = size(col("toks"))
     val tf = d.filter(n >= 2).select(col("doc_id"),

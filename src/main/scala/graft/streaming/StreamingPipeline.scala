@@ -142,9 +142,9 @@ object StreamingPipeline {
     * k < nBands — k <= 3 here; at the default maxHamming=12 the 12
     * differing bits can spread 3 per band, so band blocking is a
     * recall heuristic, not a guarantee.) Because stream and batch use
-    * IDENTICAL banding, the DISTINCT emitted pair set still equals the
-    * batch operator's output regardless of arrival order or batch
-    * boundaries (spec-pinned). A pair agreeing
+    * IDENTICAL banding ([[TrainingOps.simhashBands]]), the DISTINCT
+    * emitted pair set still equals the batch operator's output
+    * regardless of arrival order or batch boundaries (spec-pinned). A pair agreeing
     * on multiple bands is emitted once per agreeing band — downstream
     * consumers dedup with a dropDuplicates, exactly like the batch
     * candidate set. State is per-bucket and grows with the corpus; at
@@ -154,21 +154,7 @@ object StreamingPipeline {
   def streamNearDupPairs(docs: Dataset[(Long, String)], maxHamming: Int = 12,
                          stateTtl: Option[String] = None): Dataset[NearDupPair] = {
     import docs.sparkSession.implicits._
-    graft.GraftFunctions.register(docs.sparkSession)
-    val nBands = 4
-    val bandBits = TrainingOps.SimhashBits / nBands // 15
-    val bandMask = (1L << bandBits) - 1
-    val banded = docs.toDF("doc_id", "text")
-      .select(col("doc_id"),
-        call_function("simhash60",
-          TrainingOps.normText(col("text"))).as("sh"))
-      .select(col("doc_id"), col("sh"),
-        explode(array((0 until nBands).map { i =>
-          struct(lit(i).as("band"),
-            call_function("shiftright", col("sh"), lit(i * bandBits))
-              .bitwiseAND(bandMask).as("bval"))
-        }: _*)).as("b"))
-      .select(col("doc_id"), col("sh"), col("b.band").as("band"), col("b.bval").as("bval"))
+    val banded = TrainingOps.simhashBands(docs.toDF("doc_id", "text"))
       .as[(Long, Long, Int, Long)]
     val timeout =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout

@@ -115,6 +115,14 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val filterLines = p.linesIterator.filter(_.trim.startsWith("+- Filter")).mkString("\n")
       assert(!filterLines.contains("aggregate("),
         s"simhash aggregate leaked into a Filter:\n$filterLines")
+      // the band table is built from the unsorted signatures: no range
+      // exchange or sort inside the persisted relation
+      val cached = s.plan.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cachedPlan.toString()
+      }
+      assert(cached.nonEmpty &&
+        cached.forall(c => !c.contains("Sort [") && !c.contains("rangepartitioning")),
+        s"the band relation sorts its signatures:\n${cached.mkString("\n")}")
     } finally s.release()
   }
 
@@ -167,6 +175,30 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       () => graft.ops.TrainingOps.simhashNearDupPairs(docs),
       () => graft.ops.TrainingOps.jaccardNearDupPairs(docs),
       () => graft.ops.TrainingOps.dupComponents(docs))
+  }
+
+  test("star member labels stay lazy until the caller materializes") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftshim.CacheProbe.cachedEntries
+    val sc = spark.sparkContext
+    val path = spark.range(63).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+    val cachedBefore = cachedEntries(spark)
+    val (labels, _) = graft.ops.TrainingOps.connectedComponentsStarMembersWithRounds(path)
+    try {
+      // a distinct over the last round's checkpointed edge scan, not a
+      // scan of a label checkpoint of its own
+      val p = labels.plan.queryExecution.executedPlan.toString()
+      assert(p.contains("HashAggregate") && p.contains("Scan ExistingRDD"),
+        s"expected a lazy distinct over the edge checkpoint:\n$p")
+      val comps = labels.plan.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(comps.map(_._1).sorted.toSeq == (0L to 63L) && comps.forall(_._2 == 0L),
+        s"a 64-node path is one component rooted at 0: ${comps.toSeq}")
+    } finally labels.release()
+    val left = sc.getPersistentRDDs.keySet.toSet -- rddsBefore
+    assert(left.isEmpty, s"${left.size} persisted RDDs left after release")
+    assert(cachedEntries(spark) == cachedBefore,
+      s"${cachedEntries(spark) - cachedBefore} cached frames left after release")
   }
 
   test("x56: first-occurrence pick is a min-struct aggregate, not a hot-key window") {
