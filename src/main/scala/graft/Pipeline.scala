@@ -7,15 +7,18 @@ import graft.model.{ExtractionResult, Lineage, Turn}
 /** Dataset-level extraction pipeline (SURVEY.md §3.1 Spark re-expression).
   *
   * One job, one lineage: scan → salted repartition (hot-conversation skew
-  * control, north_rule) → mapPartitions extract → sortWithinPartitions →
-  * partitioned parquet sink + per-partition lineage rows + metrics.
+  * control, north_rule) → mapPartitions extract → coalesce to byte-sized
+  * slices → sortWithinPartitions → partitioned parquet sink +
+  * per-partition lineage rows + metrics.
   * Resume = left-anti join against committed keys (idempotent writes
   * keyed by (conv_id, turn_idx)).
   *
   * Scale notes (100 TB / 10^12 turns):
   *  - extraction is embarrassingly parallel per turn: no shuffle is
   *    strictly required; the single salted repartition exists to break
-  *    up hot conversations and right-size partitions for the sink.
+  *    up hot conversations. The sink sizes its own write tasks: it merges
+  *    partitions that average under 4 MiB (`sinkSlices`), since each
+  *    write task pays a fixed set-up whatever its bytes.
   *  - column pruning matters: metrics jobs must not read `text` — all
   *    stats queries select only narrow columns before any wide stage.
   *  - the mapPartitions boundary breaks whole-stage codegen by design;
@@ -115,7 +118,7 @@ object Pipeline {
     import spark.implicits._
     val mode = if (overwrite) SaveMode.Overwrite else SaveMode.Append
     val acc = spark.sparkContext.collectionAccumulator[Lineage]("graft.lineage")
-    val sorted = results.sortWithinPartitions("conv_id", "turn_idx")
+    val sorted = results.coalesce(sinkSlices(results)).sortWithinPartitions("conv_id", "turn_idx")
     val tracked = sorted.mapPartitions { it =>
       val tc = org.apache.spark.TaskContext.get()
       val pid = tc.partitionId()
@@ -145,6 +148,29 @@ object Pipeline {
     // rolling window per type alongside the cumulative aggregates)
     rollingKindStats(committed)
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics_rolling")
+  }
+
+  /** Write tasks for the results sink: one per
+    * `spark.sql.files.openCostInBytes` (Spark's own per-file cost, 4 MiB)
+    * of the plan's estimated size, rounded up to whole waves of
+    * `defaultParallelism`. A write task pays a fixed set-up (Hadoop
+    * Configuration copies, the parquet record writer's config parse) of
+    * about 60 ms on a 4-core host, so many small part files cost that
+    * set-up, not their bytes. `coalesce` never raises the count: input
+    * partitions that already average >= 4 MiB pass through. Read from
+    * the optimized plan's statistics, so sizing runs no job; an unknown
+    * size reads as Long.MaxValue and caps at Int.MaxValue, a no-op.
+    * Through `mapPartitions` the estimate is the input's size, and for a
+    * parquet input that is its compressed size on disk: a highly
+    * compressible input merges into fewer, larger slices than its
+    * results' bytes would ask for. */
+  private def sinkSlices(results: Dataset[_]): Int = {
+    val spark = results.sparkSession
+    val bytes = results.queryExecution.optimizedPlan.stats.sizeInBytes
+    val open = BigInt(spark.sessionState.conf.filesOpenCostInBytes).max(1)
+    val wave = BigInt(spark.sparkContext.defaultParallelism)
+    val need = ((bytes + open - 1) / open).max(1)
+    (((need + wave - 1) / wave) * wave).min(Int.MaxValue).toInt
   }
 
   /** Corpus-level metrics [STR] — the reference's processing-stats

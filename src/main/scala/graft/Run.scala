@@ -14,8 +14,11 @@ import org.apache.spark.sql.SparkSession
   *   <outDir>  output root; writes results/, lineage/, metrics/
   *   --resume            anti-join against outDir/results and only
   *                       process the remainder (append)
-  *   --partitions N      salted repartition width (default: keep input
-  *                       partitioning — extraction itself needs no shuffle)
+  *   --partitions N      extraction partitions: the salted repartition
+  *                       width (default: keep input partitioning —
+  *                       extraction itself needs no shuffle); the sink
+  *                       still merges slices under 4 MiB into fewer
+  *                       write tasks
   *
   * In local mode (no spark-submit master) it self-configures local[*];
   * under spark-submit the provided master/executors are untouched —

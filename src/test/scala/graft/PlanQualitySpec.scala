@@ -526,6 +526,16 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // lineage rows exist and row counts reconcile
     val lineageN = spark.read.parquet(s"$out/lineage").selectExpr("sum(n_rows)").head().getLong(0)
     assert(lineageN == done.size.toLong, s"lineage rows $lineageN != results ${done.size}")
+    // the append shares the sink's coalesce: the recomputed metrics cover
+    // the whole committed table, the rolling table one row per key
+    Pipeline.appendResults(Pipeline.extractTurns(remaining), out)
+    val keys = spark.read.parquet(s"$out/results").select("conv_id", "turn_idx").as[(String, Int)].collect()
+    assert(keys.length == 40 && keys.distinct.length == 40, s"expected 40 unique keys, got ${keys.length}")
+    val metricsN = spark.read.parquet(s"$out/metrics").selectExpr("sum(n_turns)").head().getLong(0)
+    assert(metricsN == keys.length.toLong, s"metrics n_turns $metricsN != committed ${keys.length}")
+    val rolling = spark.read.parquet(s"$out/metrics_rolling").select("conv_id", "turn_idx").as[(String, Int)].collect()
+    assert(rolling.length == keys.length && rolling.toSet == keys.toSet,
+      s"metrics_rolling has ${rolling.length} rows (${rolling.toSet.size} keys), not one per committed key")
   }
 
   test("resume treats a _temporary-only results dir as a fresh run (first-write SIGKILL)") {
@@ -570,6 +580,69 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("conv_id", "turn_idx").as[(String, Int)].collect()
     assert(keys.length == 40, s"stale attempt leaked: ${keys.length} rows, expected 40")
     assert(keys.distinct.length == 40, "duplicate keys after resume")
+  }
+
+  /** 40 turns from `parts` explicit round-robin partitions, extracted and
+    * written through `writeResults`; returns the output dir. */
+  private def sinkWrite(turns: Seq[graft.model.Turn], parts: Int): String = {
+    val ss = spark
+    import ss.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    Pipeline.writeResults(Pipeline.extractTurns(spark.createDataset(turns).repartition(parts)), out)
+    out
+  }
+
+  private def sinkTurns(): Seq[graft.model.Turn] =
+    Pipeline.turnsFromDocuments(spark, sfDir).orderBy("conv_id", "turn_idx").limit(40).collect().toSeq
+
+  /** Jobs one `sinkWrite` runs: the input's repartition stage, the
+    * results and lineage writes, the read-back's schema inference, and a
+    * shuffle stage plus a write each for metrics and metrics_rolling. */
+  private val SinkJobs = 8
+
+  private def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+
+  test("the sink merges sub-4 MiB partitions into at most one wave of write tasks") {
+    val turns = sinkTurns()
+    val dp = spark.sparkContext.defaultParallelism
+    val spread = sinkWrite(turns, 4 * dp)
+    val files = partFiles(s"$spread/results")
+    assert(files.length <= dp, s"${4 * dp} small partitions wrote ${files.length} part files, expected at most $dp")
+    val lineage = spark.read.parquet(s"$spread/lineage").select("n_rows").collect().map(_.getLong(0))
+    assert(lineage.length == files.length, s"${lineage.length} lineage rows for ${files.length} files")
+    assert(lineage.sum == 40L, s"lineage n_rows sum ${lineage.sum}, expected 40")
+    // merging slices changes no committed table: same schema, same rows
+    // both ways, as a write of the same turns from one partition
+    val single = sinkWrite(turns, 1)
+    assert(partFiles(s"$single/results").length == 1, "a 1-partition input must write one file")
+    for (t <- Seq("results", "metrics", "metrics_rolling")) {
+      val a = spark.read.parquet(s"$spread/$t")
+      val b = spark.read.parquet(s"$single/$t")
+      assert(a.schema == b.schema, s"$t schema differs:\n${a.schema.treeString}\n${b.schema.treeString}")
+      // Row equality compares the map columns by value (exceptAll rejects them)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+      val (ra, rb) = (rows(a), rows(b))
+      assert(ra == rb, s"$t differs: ${(ra.keySet -- rb.keySet).take(2)} / ${(rb.keySet -- ra.keySet).take(2)}")
+    }
+  }
+
+  test("sink sizing runs no Spark job: one writeResults runs the same jobs as before") {
+    import org.apache.spark.sql.graftshim.BusProbe.drain
+    val turns = sinkTurns()
+    val dp = spark.sparkContext.defaultParallelism
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      sinkWrite(turns, 4 * dp)
+      drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == SinkJobs, s"one writeResults ran ${jobs.get} jobs, expected $SinkJobs")
   }
 
   test("salting spreads a hot conversation across partitions") {
