@@ -38,21 +38,33 @@ object InfoExtract {
 
   // --- extract_id_card_info (:55-134) ------------------------------------
 
-  private val idFieldPatterns: Vector[(String, Pattern)] = Vector(
-    "name" -> "(?:name|nama)[\\s:]+([^\\n]+)",
-    "date_of_birth" -> "(?:date of birth|birth date|birthdate|dob|tanggal lahir)[\\s:]+([^\\n]+)",
-    "gender" -> "(?:gender|sex|jenis kelamin)[\\s:]+([^\\n]+)",
-    "address" -> "(?:address|alamat)[\\s:]+([^\\n]+)",
-    "id_number" -> "(?:id|no|number|nomor)[\\s:]+([A-Z0-9\\-\\s]+)",
-    "expiration_date" -> "(?:expiration|expiry|exp|berlaku sampai)[\\s:]+([^\\n]+)",
-    "issue_date" -> "(?:issue|issued|date of issue|tanggal dikeluarkan)[\\s:]+([^\\n]+)",
-    "nationality" -> "(?:nationality|negara|warga negara|citizenship)[\\s:]+([^\\n]+)",
-    "place_of_birth" -> "(?:place of birth|birthplace|tempat lahir)[\\s:]+([^\\n]+)",
-    "blood_type" -> "(?:blood|blood type|golongan darah)[\\s:]+([^\\n]+)",
-    "marital_status" -> "(?:marital status|status perkawinan)[\\s:]+([^\\n]+)",
-    "occupation" -> "(?:occupation|job|pekerjaan)[\\s:]+([^\\n]+)",
-    "religion" -> "(?:religion|agama)[\\s:]+([^\\n]+)"
-  ).map { case (f, p) => (f, compile(p, I)) }
+  // Every pattern of the per-kind field passes sits behind an exact
+  // literal-prerequisite gate (Py.Gated): a pattern runs only when the
+  // scanned text contains one of its literal stems, so a turn is not
+  // rescanned for labels it does not contain. The CI patterns gate on
+  // the CI fold of the text they scan, computed once per call.
+
+  private val idFieldPatterns: Vector[(String, Gated)] = Vector(
+    ("name", "(?:name|nama)[\\s:]+([^\\n]+)", Seq("name", "nama")),
+    ("date_of_birth", "(?:date of birth|birth date|birthdate|dob|tanggal lahir)[\\s:]+([^\\n]+)",
+      Seq("birth", "dob", "tanggal lahir")),
+    ("gender", "(?:gender|sex|jenis kelamin)[\\s:]+([^\\n]+)", Seq("gender", "sex", "jenis kelamin")),
+    ("address", "(?:address|alamat)[\\s:]+([^\\n]+)", Seq("address", "alamat")),
+    ("id_number", "(?:id|no|number|nomor)[\\s:]+([A-Z0-9\\-\\s]+)", Seq("id", "no", "number")),
+    ("expiration_date", "(?:expiration|expiry|exp|berlaku sampai)[\\s:]+([^\\n]+)",
+      Seq("exp", "berlaku sampai")),
+    ("issue_date", "(?:issue|issued|date of issue|tanggal dikeluarkan)[\\s:]+([^\\n]+)",
+      Seq("issue", "tanggal dikeluarkan")),
+    ("nationality", "(?:nationality|negara|warga negara|citizenship)[\\s:]+([^\\n]+)",
+      Seq("nationality", "negara", "citizenship")),
+    ("place_of_birth", "(?:place of birth|birthplace|tempat lahir)[\\s:]+([^\\n]+)",
+      Seq("place of birth", "birthplace", "tempat lahir")),
+    ("blood_type", "(?:blood|blood type|golongan darah)[\\s:]+([^\\n]+)", Seq("blood", "golongan darah")),
+    ("marital_status", "(?:marital status|status perkawinan)[\\s:]+([^\\n]+)",
+      Seq("marital status", "status perkawinan")),
+    ("occupation", "(?:occupation|job|pekerjaan)[\\s:]+([^\\n]+)", Seq("occupation", "job", "pekerjaan")),
+    ("religion", "(?:religion|agama)[\\s:]+([^\\n]+)", Seq("religion", "agama"))
+  ).map { case (f, p, stems) => (f, Gated(compile(p, I), stems)) }
 
   private val idFieldLabels: Vector[(String, Vector[String])] = Vector(
     "name" -> Vector("name", "nama"),
@@ -69,18 +81,21 @@ object InfoExtract {
     "occupation" -> Vector("occupation", "job", "pekerjaan"),
     "religion" -> Vector("religion", "agama"))
 
-  private val idLabelColon: Map[String, Pattern] =
+  // both per-label patterns hold the label as one quoted literal: the
+  // label is their stem
+  private val idLabelColon: Map[String, Gated] =
     idFieldLabels.flatMap(_._2).distinct
-      .map(l => l -> compile("\\b" + Pattern.quote(l) + "\\s*:\\s*([^\\n]+)", I)).toMap
-  private val idLabelLineStart: Map[String, Pattern] =
+      .map(l => l -> Gated(compile("\\b" + Pattern.quote(l) + "\\s*:\\s*([^\\n]+)", I), Seq(l))).toMap
+  private val idLabelLineStart: Map[String, Gated] =
     idFieldLabels.flatMap(_._2).distinct
-      .map(l => l -> compile("^\\s*" + Pattern.quote(l) + "\\s+([^\\n]+)", I | M)).toMap
+      .map(l => l -> Gated(compile("^\\s*" + Pattern.quote(l) + "\\s+([^\\n]+)", I | M), Seq(l))).toMap
 
   def idCardFields(text: String): Vector[(String, String)] = {
     val textLower = lower(text)
+    val folded = foldForCi(textLower)
     val extracted = LinkedHashMap.empty[String, String]
-    for ((field, p) <- idFieldPatterns) {
-      search(p, textLower).foreach { m =>
+    for ((field, g) <- idFieldPatterns) {
+      g.search(textLower, folded).foreach { m =>
         val v = strip(m.group(1))
         if (v.nonEmpty && !extracted.contains(field)) extracted(field) = v
       }
@@ -90,11 +105,11 @@ object InfoExtract {
       val it = labels.iterator
       while (it.hasNext && !found) {
         val label = it.next()
-        search(idLabelColon(label), textLower) match {
+        idLabelColon(label).search(textLower, folded) match {
           case Some(m) if strip(m.group(1)).nonEmpty =>
             extracted(field) = strip(m.group(1)); found = true
           case _ =>
-            search(idLabelLineStart(label), textLower) match {
+            idLabelLineStart(label).search(textLower, folded) match {
               case Some(m) if strip(m.group(1)).nonEmpty =>
                 extracted(field) = strip(m.group(1)); found = true
               case _ =>
@@ -107,13 +122,17 @@ object InfoExtract {
 
   // --- extract_receipt_info (:136-276) --------------------------------------
 
-  private val pRecDateLabeled = compile("(?:date|tanggal)[\\s:]+([0-9/\\-\\.]+)")
+  // the labeled patterns are case-sensitive over textLower, so textLower
+  // is their gate view; sub[\s-]?total and subtotal both hold "total"
+  private val pRecDateLabeled = Gated(compile("(?:date|tanggal)[\\s:]+([0-9/\\-\\.]+)"), Seq("date", "tanggal"))
   private val pRecDateSimple = compile("\\b(\\d{1,2}[/\\-\\.]\\d{1,2}[/\\-\\.]\\d{2,4})\\b")
-  private val pRecTimeLabeled = compile("(?:time|waktu)[\\s:]+(\\d{1,2}:\\d{2}(?::\\d{2})?(?:\\s*[AP]M)?)")
+  private val pRecTimeLabeled =
+    Gated(compile("(?:time|waktu)[\\s:]+(\\d{1,2}:\\d{2}(?::\\d{2})?(?:\\s*[AP]M)?)"), Seq("time", "waktu"))
   private val pRecTimeSimple = compile("\\b(\\d{1,2}:\\d{2}(?::\\d{2})?(?:\\s*[AP]M)?)\\b")
-  private val pRecSubtotal = compile("(?:subtotal|sub[\\s-]?total)[\\s:]+\\$?([0-9\\.,]+)")
-  private val pRecTax = compile("(?:tax|vat|pajak)[\\s:]+\\$?([0-9\\.,]+)")
-  private val pRecTotal = compile("(?:total|amount|jumlah)[\\s:]+\\$?([0-9\\.,]+)")
+  private val pRecSubtotal = Gated(compile("(?:subtotal|sub[\\s-]?total)[\\s:]+\\$?([0-9\\.,]+)"), Seq("total"))
+  private val pRecTax = Gated(compile("(?:tax|vat|pajak)[\\s:]+\\$?([0-9\\.,]+)"), Seq("tax", "vat", "pajak"))
+  private val pRecTotal =
+    Gated(compile("(?:total|amount|jumlah)[\\s:]+\\$?([0-9\\.,]+)"), Seq("total", "amount", "jumlah"))
   private val paymentMethods = Vector(
     "cash", "card", "credit", "debit", "visa", "mastercard", "amex",
     "american express", "discover", "tunai", "kartu", "kredit")
@@ -128,17 +147,17 @@ object InfoExtract {
     val lines = splitLines(text)
     if (lines.nonEmpty && strip(lines(0)).nonEmpty) fields("merchant") = strip(lines(0))
     val textLower = lower(text)
-    search(pRecDateLabeled, textLower)
+    pRecDateLabeled.search(textLower)
       .map(m => strip(m.group(1)))
       .orElse(search(pRecDateSimple, text).map(_.group(1)))
       .foreach(fields("date") = _)
-    search(pRecTimeLabeled, textLower)
+    pRecTimeLabeled.search(textLower)
       .map(m => strip(m.group(1)))
       .orElse(search(pRecTimeSimple, text).map(_.group(1)))
       .foreach(fields("time") = _)
-    search(pRecSubtotal, textLower).foreach(m => fields("subtotal") = strip(m.group(1)))
-    search(pRecTax, textLower).foreach(m => fields("tax") = strip(m.group(1)))
-    search(pRecTotal, textLower).foreach(m => fields("total") = strip(m.group(1)))
+    pRecSubtotal.search(textLower).foreach(m => fields("subtotal") = strip(m.group(1)))
+    pRecTax.search(textLower).foreach(m => fields("tax") = strip(m.group(1)))
+    pRecTotal.search(textLower).foreach(m => fields("total") = strip(m.group(1)))
     paymentMethods.find(textLower.contains).foreach(fields("payment_method") = _)
 
     val itemLines = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -174,26 +193,33 @@ object InfoExtract {
   // information_extraction.py:307, SURVEY.md §1.3); only the fallback
   // field_patterns contribute.
 
-  private val formFieldPatterns: Vector[(String, Pattern)] = Vector(
-    "name" -> "(?:name|nama)[\\s:]+([^\\n]+)",
-    "email" -> "(?:email|e-mail)[\\s:]+([^\\n]+)",
-    "phone" -> "(?:phone|telephone|tel|hp|handphone)[\\s:]+([^\\n]+)",
-    "address" -> "(?:address|alamat)[\\s:]+([^\\n]+)",
-    "date" -> "(?:date|tanggal)[\\s:]+([^\\n]+)",
-    "company" -> "(?:company|perusahaan)[\\s:]+([^\\n]+)",
-    "department" -> "(?:department|departemen)[\\s:]+([^\\n]+)"
-  ).map { case (f, p) => (f, compile(p, I)) }
+  private val formFieldPatterns: Vector[(String, Gated)] = Vector(
+    ("name", "(?:name|nama)[\\s:]+([^\\n]+)", Seq("name", "nama")),
+    ("email", "(?:email|e-mail)[\\s:]+([^\\n]+)", Seq("email", "e-mail")),
+    ("phone", "(?:phone|telephone|tel|hp|handphone)[\\s:]+([^\\n]+)", Seq("phone", "tel", "hp")),
+    ("address", "(?:address|alamat)[\\s:]+([^\\n]+)", Seq("address", "alamat")),
+    ("date", "(?:date|tanggal)[\\s:]+([^\\n]+)", Seq("date", "tanggal")),
+    ("company", "(?:company|perusahaan)[\\s:]+([^\\n]+)", Seq("company", "perusahaan")),
+    ("department", "(?:department|departemen)[\\s:]+([^\\n]+)", Seq("department", "departemen"))
+  ).map { case (f, p, stems) => (f, Gated(compile(p, I), stems)) }
 
   def formFields(text: String): Vector[(String, String)] = {
+    val folded = foldForCi(text)
     val fields = LinkedHashMap.empty[String, String]
-    for ((field, p) <- formFieldPatterns if !fields.contains(field)) {
-      search(p, text).foreach { m =>
+    for ((field, g) <- formFieldPatterns if !fields.contains(field)) {
+      g.search(text, folded).foreach { m =>
         val v = strip(m.group(1))
         if (v.nonEmpty) fields(field) = v
       }
     }
     fields.toVector
   }
+
+  /** Every gated pattern of this object, for PropertySpec's soundness check. */
+  private[graft] def gates: Seq[Gated] =
+    idFieldPatterns.map(_._2) ++ idLabelColon.values ++ idLabelLineStart.values ++
+      Seq(pRecDateLabeled, pRecTimeLabeled, pRecSubtotal, pRecTax, pRecTotal) ++
+      formFieldPatterns.map(_._2)
 
   // --- extract_table_info (:331-528) --------------------------------------------
 

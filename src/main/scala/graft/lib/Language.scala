@@ -21,17 +21,18 @@ object Language {
     "more", "has", "was", "were", "can", "said", "out", "use", "into",
     "some", "than", "other", "time", "now", "only", "like", "just")
 
-  // each pattern paired with its literal stem: the patterns are
-  // case-SENSITIVE and run against textLower itself, so
-  // textLower.contains(stem) is an exactly-necessary condition — the
-  // regex only runs when the stem is present (a "makan" false positive
-  // just means one confirming regex scan)
+  // each pattern behind its literal stem (Py.Gated): the patterns are
+  // case-SENSITIVE and run against textLower itself, which is their
+  // gate view (a "makan" false positive just means one confirming scan)
   private val idPatterns =
     Vector("akan" -> "\\bakan\\s+\\w+\\b", "sedang" -> "\\bsedang\\s+\\w+\\b",
-      "telah" -> "\\btelah\\s+\\w+\\b").map { case (s, p) => (s, compile(p)) }
+      "telah" -> "\\btelah\\s+\\w+\\b").map { case (s, p) => Gated(compile(p), Seq(s)) }
   private val enPatterns =
     Vector("will" -> "\\bwill\\s+\\w+\\b", "have" -> "\\bhave\\s+\\w+\\b",
-      "has" -> "\\bhas\\s+\\w+\\b").map { case (s, p) => (s, compile(p)) }
+      "has" -> "\\bhas\\s+\\w+\\b").map { case (s, p) => Gated(compile(p), Seq(s)) }
+
+  /** Every gated pattern of this object, for PropertySpec's soundness check. */
+  private[graft] def gates: Seq[Gated] = idPatterns ++ enPatterns
 
   def detectLanguage(text: String): String = {
     if (text == null || text.isEmpty || Py.len(text) < 20) return "unknown"
@@ -56,10 +57,8 @@ object Language {
     val enCount = enKeywords.count(segments.contains)
     var idScore = idCount.toDouble / idKeywords.length
     var enScore = enCount.toDouble / enKeywords.length
-    idScore += idPatterns.count { case (stem, p) =>
-      textLower.contains(stem) && search(p, textLower).isDefined } * 0.1
-    enScore += enPatterns.count { case (stem, p) =>
-      textLower.contains(stem) && search(p, textLower).isDefined } * 0.1
+    idScore += idPatterns.count(_.search(textLower).isDefined) * 0.1
+    enScore += enPatterns.count(_.search(textLower).isDefined) * 0.1
     if (idScore > 0.15 && idScore > enScore) "id"
     else if (enScore > 0.15) "en"
     else {

@@ -313,7 +313,8 @@ object Py {
     * tests `toLowerCase(toUpperCase(cp))` equality, so input cp can
     * match an ASCII pattern letter p iff regexCiFold(cp) == p.
     * (Exhaustively spec-pinned over the BMP + case-mapped astral
-    * blocks — used only to GATE case-insensitive literal scans.) */
+    * blocks — used only to GATE case-insensitive literal scans, see
+    * [[Gated]].) */
   def regexCiFold(cp: Int): Int = Character.toLowerCase(Character.toUpperCase(cp))
 
   /** Per-codepoint CI fold of a string (length can change only via
@@ -332,6 +333,35 @@ object Py {
       j += Character.charCount(cp)
     }
     sb.toString
+  }
+
+  /** A regex behind an exact literal prerequisite: `pattern` can match a
+    * string only if the string's [[Gated.view]] contains one of `stems`.
+    * The view is the string itself for a case-sensitive pattern and its
+    * [[foldForCi]] for a CASE_INSENSITIVE one (stems then given folded),
+    * so every alternative of the pattern must contain a stem as a
+    * contiguous literal — no class, `\s` or quantifier inside it.
+    * PropertySpec checks every table of these. A closed gate skips only
+    * a scan that cannot match; an open one runs the regex unchanged. */
+  final case class Gated(pattern: Pattern, stems: Seq[String]) {
+    val ci: Boolean = (pattern.flags & Pattern.CASE_INSENSITIVE) != 0
+    require(!ci || stems.forall(s => foldForCi(s) == s), s"CI stems must be folded: $stems")
+
+    def view(s: String): String = if (ci) foldForCi(s) else s
+
+    /** `view` must be [[view]] of the string the pattern would scan. */
+    def opens(view: String): Boolean = stems.exists(view.contains)
+
+    def search(s: String, view: String): Option[Matcher] =
+      if (opens(view)) Py.search(pattern, s) else None
+
+    def search(s: String): Option[Matcher] = search(s, view(s))
+
+    def sub(repl: String, s: String): String =
+      if (opens(view(s))) Py.sub(pattern, repl, s) else s
+
+    def subLit(repl: String, s: String): String =
+      if (opens(view(s))) Py.subLit(pattern, repl, s) else s
   }
 
   /** re.sub(pattern, repl, s) with repl already in Java `$n` form. */

@@ -131,24 +131,20 @@ object Summarizer {
 
   // --- extract_key_insights regex path (text_processing.py:2316-2347) ----
 
+  // Each CI pattern behind its literal stems (Py.Gated), tested on the
+  // sentence's CI fold; no stem spans a \s or . of its pattern.
   private val insightPatterns = Vector(
-    "(?:key|main|important|significant|critical).{0,20}(?:point|fact|finding|conclusion)",
-    "(?:in\\s+summary|to\\s+summarize|in\\s+conclusion|concluding|therefore)",
-    "(?:must|should|need to|have to)",
-    "increase|decrease|improve|reduce|enhance|cause"
-  ).map(compile(_, I))
+    ("(?:key|main|important|significant|critical).{0,20}(?:point|fact|finding|conclusion)",
+      Seq("key", "main", "important", "significant", "critical")),
+    ("(?:in\\s+summary|to\\s+summarize|in\\s+conclusion|concluding|therefore)",
+      Seq("summar", "conclu", "therefore")),
+    ("(?:must|should|need to|have to)", Seq("must", "should", "need", "have")),
+    ("increase|decrease|improve|reduce|enhance|cause",
+      Seq("increase", "decrease", "improve", "reduce", "enhance", "cause"))
+  ).map { case (p, stems) => Gated(compile(p, I), stems) }
 
-  /** Per-pattern literal stems: pattern k can only match a sentence
-    * whose CI-fold (Py.foldForCi — the exact Java-regex fold, spec-
-    * pinned) contains one of gates(k). Every alternative of every
-    * pattern contains one of its stems as a contiguous literal (no \s
-    * or . spans inside a stem), so a failed gate skips only a
-    * guaranteed-non-matching regex scan. */
-  private val insightGates = Vector(
-    Vector("key", "main", "important", "significant", "critical"),
-    Vector("summar", "conclu", "therefore"),
-    Vector("must", "should", "need", "have"),
-    Vector("increase", "decrease", "improve", "reduce", "enhance", "cause"))
+  /** Every gated pattern of this object, for PropertySpec's soundness check. */
+  private[graft] def gates: Seq[Gated] = insightPatterns
 
   def extractKeyInsights(text: String): Vector[String] = {
     val sentences = splitSentences(text)
@@ -158,9 +154,7 @@ object Summarizer {
     while (it.hasNext && !done) {
       val sentence = it.next()
       val folded = Py.foldForCi(sentence)
-      if (insightPatterns.indices.exists(k =>
-        insightGates(k).exists(folded.contains) &&
-          search(insightPatterns(k), sentence).isDefined))
+      if (insightPatterns.exists(_.search(sentence, folded).isDefined))
         insights += sentence
       if (insights.length >= 5) done = true
     }

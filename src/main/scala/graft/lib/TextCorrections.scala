@@ -46,8 +46,8 @@ object TextCorrections {
   }
   private val pPunctCap = compile("([.!?,:;])([A-Z0-9])")
   private val pMerged = compile("([a-z])([A-Z])")
-  private val pManyNl = compile("\\n{3,}")
-  private val pHyphenNl = compile("(\\w+)-\\n(\\w+)")
+  private val pManyNl = Gated(compile("\\n{3,}"), Seq("\n\n\n"))
+  private val pHyphenNl = Gated(compile("(\\w+)-\\n(\\w+)"), Seq("-\n"))
 
   /** Strip astral (non-BMP) code points — Python iterates code points,
     * so a bare UTF-16 char filter would leave lone surrogates
@@ -74,12 +74,15 @@ object TextCorrections {
     sb.toString
   }
 
-  // --- literal-prerequisite gates for the head passes -----------------------
-  // Each gate is an EXACT necessary condition for its (case-sensitive)
-  // pattern to match the same string, so a false gate skips only
-  // identity rewrites; all classes below are the translated pattern's
-  // own classes (\d → \p{Nd} ≡ Character.isDigit; [a-zA-Z0-9.!?,:;]
-  // literal ASCII).
+  // --- literal-prerequisite gates ----------------------------------------------
+  // Each gate is an EXACT necessary condition for its pattern to match
+  // the string it is tested on, so a false gate skips only identity
+  // rewrites and scans that cannot match. The head passes use the char
+  // tests below, whose classes are the translated pattern's own classes
+  // (\d → \p{Nd} ≡ Character.isDigit; [a-zA-Z0-9.!?,:;] literal ASCII).
+  // The per-kind fixers (ID card, form) and the newline passes put each
+  // pattern behind its literal stems (Py.Gated), evaluated on the current
+  // text because each chain rewrites in order.
 
   private def hasBulletChar(s: String): Boolean = {
     var i = 0
@@ -92,9 +95,15 @@ object TextCorrections {
     false
   }
 
+  /** Any \p{Nd} code point (astral digits too: fixIdCardText may see them). */
   private def hasNd(s: String): Boolean = {
     var i = 0
-    while (i < s.length) { if (Character.isDigit(s.charAt(i))) return true; i += 1 }
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (Character.isDigit(c) || (Character.isHighSurrogate(c) && Character.isDigit(s.codePointAt(i))))
+        return true
+      i += 1
+    }
     false
   }
 
@@ -176,10 +185,8 @@ object TextCorrections {
   def postProcessText(text: String, imageType: String): String = {
     if (text == null || text.isEmpty) return ""
     var t = postProcessHead(text)
-    // exact literal prerequisites: \n{3,} needs a triple newline,
-    // (\w+)-\n(\w+) needs the "-\n" pair
-    if (t.contains("\n\n\n")) t = sub(pManyNl, "\n\n", t)
-    if (t.contains("-\n")) t = sub(pHyphenNl, "$1$2", t)
+    t = pManyNl.sub("\n\n", t)
+    t = pHyphenNl.sub("$1$2", t)
     val kind = if (imageType == null) "" else lower(imageType)
     if (kind.contains("receipt")) t = fixReceiptText(t)
     else if (kind.contains("id_card")) t = fixIdCardText(t)
@@ -268,19 +275,19 @@ object TextCorrections {
     "NAMA", "ALAMAT", "TEMPAT/TGL LAHIR", "JENIS KELAMIN", "AGAMA",
     "STATUS PERKAWINAN", "PEKERJAAN", "KEWARGANEGARAAN", "BERLAKU HINGGA",
     "DESA/KELURAHAN", "KECAMATAN", "KABUPATEN", "PROVINSI")
-  private val idFieldColon: Vector[Pattern] =
-    idFields.map(f => compile("(" + Pattern.quote(f) + ")\\s+([^:\\n]+)"))
-  private val pNikSearch = compile("NIK\\s*:?\\s*([0-9\\s]+)", I)
+  private val idFieldColon: Vector[Gated] =
+    idFields.map(f => Gated(compile("(" + Pattern.quote(f) + ")\\s+([^:\\n]+)"), Seq(f)))
+  private val pNikSearch = Gated(compile("NIK\\s*:?\\s*([0-9\\s]+)", I), Seq("nik"))
   private val pNikSub = compile("NIK\\s*:?\\s*[0-9\\s]+", I)
   private val pDate = compile("(\\d{1,2})[/\\-\\.\\\\](\\d{1,2})[/\\-\\.\\\\](\\d{2,4})")
 
   def fixIdCardText(text0: String): String = {
     var t = text0
     for ((w, r) <- idCardFixes) t = replaceWordLiteral(t, w, r, ignoreCase = true)
-    for (p <- idFieldColon) t = sub(p, "$1: $2", t)
+    for (g <- idFieldColon) t = g.sub("$1: $2", t)
     // NIK 16-digit grouping; note the reference strips only ' ' (not \n)
     // from the captured run and the rewrite's trailing \s+ eats newlines.
-    search(pNikSearch, t).foreach { m =>
+    pNikSearch.search(t).foreach { m =>
       val nik = m.group(1).replace(" ", "")
       if (nik.length >= 15) {
         val sb = new StringBuilder
@@ -296,7 +303,8 @@ object TextCorrections {
     }
     // Date normalization: finditer over the *current* text, then plain
     // substring replacement of each match (replaces all occurrences).
-    for (m <- finditer(pDate, t)) {
+    // pDate needs a digit (\d → \p{Nd}).
+    if (hasNd(t)) for (m <- finditer(pDate, t)) {
       val Vector(day, month, year) = m.groups
       val fd = zfill(day, 2) + "-" + zfill(month, 2) + "-" +
         zfill(year, if (year.length == 2) 2 else 4)
@@ -307,44 +315,51 @@ object TextCorrections {
 
   // --- _fix_form_text (text_processing.py:406-460) ----------------------
 
-  private val formFieldFixes: Vector[(Pattern, String)] = Vector(
-    "\\b(?:F|f)irst\\s*(?:N|n)ame\\b" -> "First Name",
-    "\\b(?:L|l)ast\\s*(?:N|n)ame\\b" -> "Last Name",
-    "\\b(?:M|m)iddle\\s*(?:N|n)ame\\b" -> "Middle Name",
-    "\\b(?:F|f)ull\\s*(?:N|n)ame\\b" -> "Full Name",
-    "\\b(?:A|a)ddress\\b" -> "Address", "\\b(?:C|c)ity\\b" -> "City",
-    "\\b(?:S|s)tate\\b" -> "State",
-    "\\b(?:Z|z)ip\\s*(?:C|c)ode\\b" -> "Zip Code",
-    "\\b(?:P|p)ostal\\s*(?:C|c)ode\\b" -> "Postal Code",
-    "\\b(?:C|c)ountry\\b" -> "Country", "\\b(?:E|e)mail\\b" -> "Email",
-    "\\b(?:P|p)hone\\b" -> "Phone", "\\b(?:M|m)obile\\b" -> "Mobile",
-    "\\b(?:D|d)ate\\s*(?:O|o)f\\s*(?:B|b)irth\\b" -> "Date of Birth",
-    "\\b(?:G|g)ender\\b" -> "Gender",
-    "\\b(?:O|o)ccupation\\b" -> "Occupation",
-    "\\b(?:C|c)ompany\\b" -> "Company",
-    "\\b(?:D|d)epartment\\b" -> "Department",
-    "\\b(?:S|s)ignature\\b" -> "Signature", "\\b(?:D|d)ate\\b" -> "Date"
-  ).map { case (p, r) => (compile(p), r) }
+  // (pattern, stem, replacement): the stem is a case-sensitive literal
+  // run that every match of the pattern contains
+  private val formFieldFixes: Vector[(Gated, String)] = Vector(
+    ("\\b(?:F|f)irst\\s*(?:N|n)ame\\b", "irst", "First Name"),
+    ("\\b(?:L|l)ast\\s*(?:N|n)ame\\b", "ast", "Last Name"),
+    ("\\b(?:M|m)iddle\\s*(?:N|n)ame\\b", "iddle", "Middle Name"),
+    ("\\b(?:F|f)ull\\s*(?:N|n)ame\\b", "ull", "Full Name"),
+    ("\\b(?:A|a)ddress\\b", "ddress", "Address"), ("\\b(?:C|c)ity\\b", "ity", "City"),
+    ("\\b(?:S|s)tate\\b", "tate", "State"),
+    ("\\b(?:Z|z)ip\\s*(?:C|c)ode\\b", "ode", "Zip Code"),
+    ("\\b(?:P|p)ostal\\s*(?:C|c)ode\\b", "ostal", "Postal Code"),
+    ("\\b(?:C|c)ountry\\b", "ountry", "Country"), ("\\b(?:E|e)mail\\b", "mail", "Email"),
+    ("\\b(?:P|p)hone\\b", "hone", "Phone"), ("\\b(?:M|m)obile\\b", "obile", "Mobile"),
+    ("\\b(?:D|d)ate\\s*(?:O|o)f\\s*(?:B|b)irth\\b", "irth", "Date of Birth"),
+    ("\\b(?:G|g)ender\\b", "ender", "Gender"),
+    ("\\b(?:O|o)ccupation\\b", "ccupation", "Occupation"),
+    ("\\b(?:C|c)ompany\\b", "ompany", "Company"),
+    ("\\b(?:D|d)epartment\\b", "epartment", "Department"),
+    ("\\b(?:S|s)ignature\\b", "ignature", "Signature"), ("\\b(?:D|d)ate\\b", "ate", "Date")
+  ).map { case (p, stem, r) => (Gated(compile(p), Seq(stem)), r) }
   private val formFieldValues: Vector[String] = formFieldFixes.map(_._2)
-  private val formColon: Vector[Pattern] =
-    formFieldValues.map(f => compile("(" + Pattern.quote(f) + ")\\s+([^:\\n]+)"))
-  private val pCheckedBox = compile("\\[\\s*[xX\u2713\u2714]\\s*\\]")
-  private val pEmptyBox = compile("\\[\\s*\\]")
-  private val formNewline: Vector[Pattern] =
-    formFieldValues.map(f => compile("(" + Pattern.quote(f) + ":\\s+[^\\n]+)([^\\n])"))
+  private val formColon: Vector[Gated] =
+    formFieldValues.map(f => Gated(compile("(" + Pattern.quote(f) + ")\\s+([^:\\n]+)"), Seq(f)))
+  private val pCheckedBox = Gated(compile("\\[\\s*[xX\u2713\u2714]\\s*\\]"), Seq("["))
+  private val pEmptyBox = Gated(compile("\\[\\s*\\]"), Seq("["))
+  private val formNewline: Vector[Gated] =
+    formFieldValues.map(f => Gated(compile("(" + Pattern.quote(f) + ":\\s+[^\\n]+)([^\\n])"), Seq(f + ":")))
 
   def fixFormText(text0: String): String = {
     var t = text0
-    for ((p, r) <- formFieldFixes) t = subLit(p, r, t)
-    for (p <- formColon) t = sub(p, "$1: $2", t)
-    t = subLit(pCheckedBox, "\u2611", t)
-    t = subLit(pEmptyBox, "\u2610", t)
+    for ((g, r) <- formFieldFixes) t = g.subLit(r, t)
+    for (g <- formColon) t = g.sub("$1: $2", t)
+    t = pCheckedBox.subLit("\u2611", t)
+    t = pEmptyBox.subLit("\u2610", t)
     // Reference quirk preserved: the greedy [^\n]+ backtracks one char,
     // so each matched field line gets its LAST char pushed to a new line
     // (text_processing.py:454-458).
-    for (p <- formNewline) t = sub(p, "$1\n$2", t)
+    for (g <- formNewline) t = g.sub("$1\n$2", t)
     t
   }
+
+  /** Every gated pattern of this object, for PropertySpec's soundness check. */
+  private[graft] def gates: Seq[Gated] =
+    Seq(pManyNl, pHyphenNl, pNikSearch, pCheckedBox, pEmptyBox) ++ idFieldColon ++
+      formFieldFixes.map(_._1) ++ formColon ++ formNewline
 
   // --- _fix_table_text (text_processing.py:462-599) ----------------------
 
@@ -486,9 +501,34 @@ object TextCorrections {
   private val pNlRun = compile("\\n+")
 
   /** Final API projection applied to text/summary/insights
-    * (app/api/routes.py:976-981). Idempotent. */
+    * (app/api/routes.py:976-981). Converges after two applications. */
   def cleanResponseText(text: String): String = {
     if (text == null || text.isEmpty) return ""
+    if (singleSpacedPlain(text)) strip(text) else cleanRewrite(text)
+  }
+
+  /** No backslash, and every Python-whitespace char (the `\s` class
+    * Py.translate emits) is a ' ' with no whitespace neighbour: then
+    * each of cleanRewrite's four rewrites is the identity. */
+  private[graft] def singleSpacedPlain(s: String): Boolean = {
+    var prevSpace = false
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == ' ') {
+        if (prevSpace) return false
+        prevSpace = true
+      } else {
+        if (c == '\\' || ((c < ' ' || c >= '\u0085') && isSpaceCp(c))) return false
+        prevSpace = false
+      }
+      i += 1
+    }
+    true
+  }
+
+  /** The reference's four rewrites, then strip. */
+  private[graft] def cleanRewrite(text: String): String = {
     var t = sub(pNlRun, " ", text)
     t = sub(pWsRun, " ", t)
     t = t.replace("\\", "")
