@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ops.TrainingOps
 
 /** Physical-plan assertions — the 100 TB safety net (SURVEY.md §4.2).
   * Verifies that Catalyst actually gives us pushdown, pruning,
@@ -199,6 +200,115 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(left.isEmpty, s"${left.size} persisted RDDs left after release")
     assert(cachedEntries(spark) == cachedBefore,
       s"${cachedEntries(spark) - cachedBefore} cached frames left after release")
+  }
+
+  // --- Staged.iterate: the one fixed-point loop's release accounting ------
+
+  /** Drives `Staged.iterate` over lazily checkpointed `spark.range`
+    * rounds whose releases are counted and logged, with the round's
+    * action (a count) logged too; `fail` throws from that round's step
+    * (`"step"`) or action (`"action"`). Returns the outcome, the event
+    * log and each state's release count (state 0 is the initial one). */
+  private def iterateLogged(rounds: Int, fail: Option[(Int, String)] = None)
+      : (Either[Throwable, (TrainingOps.Staged, Int)], Seq[String], Map[Int, Int]) = {
+    val log = scala.collection.mutable.ArrayBuffer[String]()
+    val released = scala.collection.mutable.Map[Int, Int]().withDefaultValue(0)
+    def state(i: Int): TrainingOps.Staged = {
+      val cp = TrainingOps.trackedCheckpoint(spark.range(8).toDF("id"), eager = false)
+      TrainingOps.Staged(cp.plan.withColumn("round", org.apache.spark.sql.functions.lit(i)),
+        () => { log += s"release $i"; released(i) += 1; cp.release() })
+    }
+    var i = 0
+    val out = scala.util.Try(TrainingOps.Staged.iterate(state(0)) { _ =>
+      i += 1
+      if (fail.contains((i, "step"))) throw new RuntimeException(s"step $i")
+      state(i)
+    } { df =>
+      log += s"action $i"
+      df.count()
+      if (fail.contains((i, "action"))) throw new RuntimeException(s"action $i")
+      i == rounds
+    }).toEither
+    (out, log.toSeq, released.toMap)
+  }
+
+  test("Staged.iterate releases each superseded round once, after its successor's action") {
+    val (out, log, released) = iterateLogged(rounds = 3)
+    val (last, n) = out.toOption.get
+    assert(n == 3)
+    assert(log == Seq("action 1", "release 0", "action 2", "release 1", "action 3", "release 2"),
+      s"events: $log")
+    assert(released == Map(0 -> 1, 1 -> 1, 2 -> 1), s"release counts: $released")
+    last.release()
+  }
+
+  test("Staged.iterate releases the live and the new round once each when a round throws") {
+    val (fromStep, stepLog, stepReleased) = iterateLogged(rounds = 5, Some((2, "step")))
+    assert(fromStep.left.toOption.exists(_.getMessage == "step 2"), s"$fromStep")
+    assert(stepLog == Seq("action 1", "release 0", "release 1"), s"events: $stepLog")
+    assert(stepReleased == Map(0 -> 1, 1 -> 1), s"release counts: $stepReleased")
+    val (fromAction, actionLog, actionReleased) =
+      iterateLogged(rounds = 5, Some((2, "action")))
+    assert(fromAction.left.toOption.exists(_.getMessage == "action 2"), s"$fromAction")
+    assert(actionLog.take(2) == Seq("action 1", "release 0") &&
+      actionLog.drop(2).sorted == Seq("action 2", "release 1", "release 2"), s"events: $actionLog")
+    assert(actionReleased == Map(0 -> 1, 1 -> 1, 2 -> 1), s"release counts: $actionReleased")
+  }
+
+  test("Staged.iterate throws at the cap and leaves no persisted RDD or cached frame") {
+    import org.apache.spark.sql.graftshim.CacheProbe.cachedEntries
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+    val cachedBefore = cachedEntries(spark)
+    var rounds = 0
+    val ex = intercept[IllegalStateException](
+      TrainingOps.Staged.iterate(TrainingOps.Staged.persisted(spark.range(8).toDF("id"))) {
+        df => TrainingOps.trackedCheckpoint(df.select((df("id") + 1).as("id")), eager = false)
+      } { df => rounds += 1; df.count(); false })
+    assert(rounds == 50, s"$rounds actions ran under the 50-round cap")
+    assert(ex.getMessage.contains("connectedComponentsStar"), ex.getMessage)
+    val left = sc.getPersistentRDDs.keySet.toSet -- rddsBefore
+    assert(left.isEmpty, s"${left.size} persisted RDDs left after the cap throw")
+    assert(cachedEntries(spark) == cachedBefore,
+      s"${cachedEntries(spark) - cachedBefore} cached frames left after the cap throw")
+  }
+
+  /** Spark jobs `f` starts, read off the listener bus. */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.sql.graftshim.BusProbe.drain
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try { f; drain(sc) } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("component loops: each round is a lazy checkpoint read by one action") {
+    import org.apache.spark.sql.functions.col
+    def path(n: Int) = spark.range(n - 1).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    // Under AQE every shuffle map stage of a round is a job of its own,
+    // so a star round runs 8 jobs and a label-prop round 5-6 on these
+    // paths, the round's action last; an eager round checkpoint adds one
+    // more job a round. Pinned at the counts of the hand-written loops
+    // that Staged.iterate replaced.
+    var rounds = 0
+    val starJobs = jobsOf {
+      val (labels, r) = TrainingOps.connectedComponentsStarMembersWithRounds(path(64))
+      rounds = r
+      labels.materialize()
+    }
+    assert(rounds == 7, s"a 64-node path took $rounds star rounds")
+    assert(starJobs == 8 * rounds + 3, s"star components ran $starJobs jobs in $rounds rounds")
+    // a 20-node path: 19 label-changing rounds and one that changes none;
+    // the first round also builds the edge cache and the initial labels
+    // (8 jobs), the component table after the last takes 2
+    val labelJobs = jobsOf(TrainingOps.labelPropagationComponents(path(20)))
+    assert(labelJobs == 124, s"label propagation ran $labelJobs jobs over 20 rounds")
   }
 
   test("x56: first-occurrence pick is a min-struct aggregate, not a hot-key window") {
@@ -628,21 +738,10 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sink sizing runs no Spark job: one writeResults runs the same jobs as before") {
-    import org.apache.spark.sql.graftshim.BusProbe.drain
     val turns = sinkTurns()
     val dp = spark.sparkContext.defaultParallelism
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      sinkWrite(turns, 4 * dp)
-      drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == SinkJobs, s"one writeResults ran ${jobs.get} jobs, expected $SinkJobs")
+    val jobs = jobsOf(sinkWrite(turns, 4 * dp))
+    assert(jobs == SinkJobs, s"one writeResults ran $jobs jobs, expected $SinkJobs")
   }
 
   test("salting spreads a hot conversation across partitions") {

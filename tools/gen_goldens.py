@@ -26,13 +26,22 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 REF = "/root/reference"
 
+SHIM_MODS = ("model.py", "text_processing.py", "information_extraction.py")
+# every reference file read at import; without them, one line and exit
+for need in (*(os.path.join(REF, "lib", mod) for mod in SHIM_MODS),
+             os.path.join(REF, "app", "api", "utils.py"),
+             os.path.join(REF, "app", "core", "markdown_formatter.py")):
+    if not os.path.exists(need):
+        sys.exit(f"gen_goldens: reference checkout REF={REF} lacks {need}")
+
 # --- shim package so `from .model import ...` works without cv2 ---------
 SHIM = os.path.join(HERE, "_refshim")
 os.makedirs(SHIM, exist_ok=True)
 open(os.path.join(SHIM, "__init__.py"), "w").close()
-for mod in ("model.py", "text_processing.py", "information_extraction.py"):
+for mod in SHIM_MODS:
     dst = os.path.join(SHIM, mod)
-    if not os.path.exists(dst):
+    # lexists: the committed links dangle until REF is checked out
+    if not os.path.lexists(dst):
         os.symlink(os.path.join(REF, "lib", mod), dst)
 sys.path.insert(0, HERE)
 
