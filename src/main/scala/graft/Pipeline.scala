@@ -8,8 +8,10 @@ import graft.model.{ExtractionResult, Lineage, Turn}
   *
   * One job, one lineage: scan → salted repartition (hot-conversation skew
   * control, north_rule) → mapPartitions extract → coalesce to byte-sized
-  * slices → sortWithinPartitions → partitioned parquet sink +
-  * per-partition lineage rows + metrics.
+  * slices → sortWithinPartitions → partitioned parquet sink. The results
+  * commit first; then the per-partition lineage rows, `metrics` and
+  * `metrics_rolling` are written at the same time, the two metrics tables
+  * over a read-back of the committed results with their known schema.
   * Resume = left-anti join against committed keys (idempotent writes
   * keyed by (conv_id, turn_idx)).
   *
@@ -84,7 +86,10 @@ object Pipeline {
     * the same iterators stream into the parquet writer — the expensive
     * extraction runs exactly once. (Speculative task retries may add
     * duplicate lineage rows; lineage is a diagnostic table, results
-    * stay exactly-once via the file committer.) */
+    * stay exactly-once via the file committer.) Once the results
+    * commit, the lineage, `metrics` and `metrics_rolling` writes run at
+    * the same time (`concurrently`); the call returns when all three
+    * have finished. */
   def writeResults(results: Dataset[ExtractionResult], outDir: String): Unit =
     writeWithLineage(results, outDir, overwrite = true)
 
@@ -140,14 +145,61 @@ object Pipeline {
     tracked.write.mode(mode).parquet(s"$outDir/results")
     val lineageRows: Seq[Lineage] =
       scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-    spark.createDataset(lineageRows).write.mode(mode).parquet(s"$outDir/lineage")
-    val committed = spark.read.parquet(s"$outDir/results").as[ExtractionResult]
-    metrics(committed).write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics")
-    // ship the reference's full stats surface in the job artifact, not
-    // only in specs (smartglass_ocr.py:1022-1075 keeps the last-10
-    // rolling window per type alongside the cumulative aggregates)
-    rollingKindStats(committed)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics_rolling")
+    // the committed table has the results' own schema: reading it with
+    // that schema runs no schema-inference job
+    val committed =
+      spark.read.schema(results.schema).parquet(s"$outDir/results").as[ExtractionResult]
+    concurrently(spark, Seq(
+      () => spark.createDataset(lineageRows).write.mode(mode).parquet(s"$outDir/lineage"),
+      () => metrics(committed).write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics"),
+      // ship the reference's full stats surface in the job artifact, not
+      // only in specs (smartglass_ocr.py:1022-1075 keeps the last-10
+      // rolling window per type alongside the cumulative aggregates)
+      () => rollingKindStats(committed)
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics_rolling")))
+  }
+
+  /** Prefix of the names of `concurrently`'s pool threads. */
+  private[graft] val TailThreads = "graft-sink-tail-"
+
+  /** Runs `writes` at the same time, one pool thread each, and returns
+    * once every one has finished. Each of them moves a few KB, so what
+    * it costs is a job's and a commit's fixed overhead; in series those
+    * add up, at once the slowest one counts. If any throws, the first
+    * failing one in `writes` order is rethrown, after all have finished,
+    * with the others' throwables added as suppressed.
+    *
+    * `SQLExecution.withThreadLocalCaptured` (what Spark's own broadcast
+    * and subquery code uses) hands each write the caller's local
+    * properties (job group, description, scheduler pool) and active
+    * session. The pool's threads inherit no thread locals, so that is
+    * all a write sees of the caller. The pool lives for one call: its
+    * threads are joined before the call returns. */
+  private[graft] def concurrently(spark: SparkSession, writes: Seq[() => Unit]): Unit = {
+    import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
+    val threads = new ConcurrentLinkedQueue[Thread]
+    val pool = Executors.newFixedThreadPool(writes.size, (r: Runnable) => {
+      val t = new Thread(null, r, s"$TailThreads${threads.size}", 0, false)
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val running = writes.map(w =>
+        org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(session, pool)(w()))
+      val failures = running.flatMap(f => scala.util.Try(f.get()).failed.toOption.map {
+        case e: ExecutionException => e.getCause
+        case e => e
+      })
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
   }
 
   /** Write tasks for the results sink: one per

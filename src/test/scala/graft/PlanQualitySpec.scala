@@ -273,20 +273,23 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       s"${cachedEntries(spark) - cachedBefore} cached frames left after the cap throw")
   }
 
-  /** Spark jobs `f` starts, read off the listener bus. */
-  private def jobsOf(f: => Unit): Int = {
+  /** The start events of the Spark jobs `f` runs, read off the listener bus. */
+  private def jobStartsOf(f: => Unit): Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
     import org.apache.spark.sql.graftshim.BusProbe.drain
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.scheduler.SparkListenerJobStart]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        jobs.add(j)
     }
     drain(sc)
     sc.addSparkListener(listener)
     try { f; drain(sc) } finally sc.removeSparkListener(listener)
-    jobs.get
+    scala.jdk.CollectionConverters.CollectionHasAsScala(jobs).asScala.toSeq
   }
+
+  /** Spark jobs `f` starts, read off the listener bus. */
+  private def jobsOf(f: => Unit): Int = jobStartsOf(f).size
 
   test("component loops: each round is a lazy checkpoint read by one action") {
     import org.apache.spark.sql.functions.col
@@ -706,9 +709,10 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     Pipeline.turnsFromDocuments(spark, sfDir).orderBy("conv_id", "turn_idx").limit(40).collect().toSeq
 
   /** Jobs one `sinkWrite` runs: the input's repartition stage, the
-    * results and lineage writes, the read-back's schema inference, and a
-    * shuffle stage plus a write each for metrics and metrics_rolling. */
-  private val SinkJobs = 8
+    * results write, the lineage write, and a shuffle stage plus a write
+    * each for metrics and metrics_rolling (the committed table is read
+    * back with a known schema, so no schema-inference job). */
+  private val SinkJobs = 7
 
   private def partFiles(dir: String): Seq[String] =
     new java.io.File(dir).list().toSeq.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
@@ -742,6 +746,102 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val dp = spark.sparkContext.defaultParallelism
     val jobs = jobsOf(sinkWrite(turns, 4 * dp))
     assert(jobs == SinkJobs, s"one writeResults ran $jobs jobs, expected $SinkJobs")
+  }
+
+  // --- the sink's concurrent tail: lineage, metrics, metrics_rolling -----
+
+  /** Live threads of `Pipeline.concurrently`'s pools. */
+  private def tailThreads(): Set[Thread] =
+    scala.jdk.CollectionConverters.SetHasAsScala(Thread.getAllStackTraces.keySet).asScala.toSet
+      .filter(t => t.getName.startsWith(Pipeline.TailThreads) && t.isAlive)
+
+  test("the sink's tail writes run at once and the call returns after the last one") {
+    val started = new java.util.concurrent.CountDownLatch(3)
+    val done = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    // each write waits until all three have started, so a serial tail
+    // cannot pass; the slower ones finish well after the fastest
+    Pipeline.concurrently(spark, (0 until 3).map { i => () =>
+      started.countDown()
+      assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS), s"write $i ran alone")
+      Thread.sleep(100L * i)
+      done.add(i)
+      ()
+    })
+    assert(done.size == 3, s"the call returned with writes $done finished")
+    assert(tailThreads().isEmpty, s"tail threads alive after the call: ${tailThreads()}")
+  }
+
+  test("a failing tail write lets the others finish; the first in order is rethrown") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val metricsFail = new RuntimeException("metrics")
+    val rollingFail = new IllegalStateException("rolling")
+    // in time the third write fails first and the first finishes last
+    val ex = intercept[RuntimeException](Pipeline.concurrently(spark, Seq(
+      () => { Thread.sleep(400); finished.set(true) },
+      () => { Thread.sleep(150); throw metricsFail },
+      () => throw rollingFail)))
+    assert(ex eq metricsFail, s"rethrown: $ex")
+    assert(ex.getSuppressed.toSeq == Seq(rollingFail), s"suppressed: ${ex.getSuppressed.toSeq}")
+    assert(finished.get, "the call returned before the first write finished")
+    assert(tailThreads().isEmpty, s"tail threads alive after the throw: ${tailThreads()}")
+  }
+
+  test("every job of a writeResults call carries the caller's job group") {
+    val sc = spark.sparkContext
+    val turns = sinkTurns()
+    sc.setJobGroup("graft-sink-group", "sink tail spec")
+    val starts =
+      try jobStartsOf(sinkWrite(turns, 4 * sc.defaultParallelism))
+      finally sc.clearJobGroup()
+    val n = starts.size
+    assert(n == SinkJobs, s"one writeResults ran $n jobs, expected $SinkJobs")
+    val groups = starts.map(j => Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    assert(groups.forall(_ == "graft-sink-group"), s"job groups: $groups")
+  }
+
+  /** Schema and row multiset of two parquet tables agree. */
+  private def assertSameTable(name: String, a: String, b: String): Unit = {
+    val (da, db) = (spark.read.parquet(a), spark.read.parquet(b))
+    assert(da.schema == db.schema, s"$name schema differs:\n${da.schema.treeString}\n${db.schema.treeString}")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val (ra, rb) = (rows(da), rows(db))
+    assert(ra == rb, s"$name differs: ${(ra.keySet -- rb.keySet).take(2)} / ${(rb.keySet -- ra.keySet).take(2)}")
+  }
+
+  /** `metrics` and `metrics_rolling` under `out` equal a serial write of
+    * `Pipeline.metrics` and `Pipeline.rollingKindStats` recomputed from
+    * the committed results. */
+  private def assertMetricsOfCommitted(out: String): Unit = {
+    val ss = spark
+    import ss.implicits._
+    val committed = spark.read.parquet(s"$out/results").as[graft.model.ExtractionResult]
+    val again = java.nio.file.Files.createTempDirectory("graft-recomputed").toString
+    Pipeline.metrics(committed).write.parquet(s"$again/metrics")
+    Pipeline.rollingKindStats(committed).write.parquet(s"$again/metrics_rolling")
+    for (t <- Seq("metrics", "metrics_rolling")) assertSameTable(t, s"$out/$t", s"$again/$t")
+  }
+
+  test("the concurrent tail's metrics tables equal a recomputation, in write and append mode") {
+    val out = java.nio.file.Files.createTempDirectory("graft-tail").toString
+    Pipeline.writeResults(Pipeline.extractTurns(Pipeline.turnsFromDocuments(spark, sfDir).limit(30)), out)
+    assertMetricsOfCommitted(out)
+    val remaining = Pipeline.resume(spark, Pipeline.turnsFromDocuments(spark, sfDir).limit(60), out)
+    Pipeline.appendResults(Pipeline.extractTurns(remaining), out)
+    assert(spark.read.parquet(s"$out/results").count() == 60)
+    assertMetricsOfCommitted(out)
+    assert(tailThreads().isEmpty, s"tail threads alive after the append: ${tailThreads()}")
+  }
+
+  test("two back-to-back writeResults calls both commit every table") {
+    val turns = sinkTurns()
+    val outs = Seq(sinkWrite(turns, 2), sinkWrite(turns, 2))
+    for (t <- Seq("results", "metrics", "metrics_rolling"))
+      assertSameTable(t, s"${outs(0)}/$t", s"${outs(1)}/$t")
+    for (o <- outs) {
+      val n = spark.read.parquet(s"$o/lineage").selectExpr("sum(n_rows)").head().getLong(0)
+      assert(n == 40L, s"lineage n_rows sum $n, expected 40")
+    }
+    assert(tailThreads().isEmpty, s"tail threads alive after two calls: ${tailThreads()}")
   }
 
   test("salting spreads a hot conversation across partitions") {
